@@ -424,6 +424,19 @@ def _abref_worktree(repo: str, ref: str) -> str:
     return wt
 
 
+def _round_pair_ratios(
+    head: list[float | None], ref: list[float | None]
+) -> list[float]:
+    """ref/head ratio per --ab-ref round, both lists indexed by round
+    (None = that run errored); a round with an error on either side
+    yields no pair."""
+    return [
+        r / max(h, 1e-9)
+        for h, r in zip(head, ref)
+        if h is not None and r is not None
+    ]
+
+
 def run_ab_ref(
     ref: str, names: list[str], rounds: int, sf_dirs: list[str]
 ) -> None:
@@ -473,7 +486,9 @@ def run_ab_ref(
             calib0 = {
                 s: workers[s].send({"op": "calib"}) for s in ("head", "ref")
             }
-            samples: dict[str, dict[str, list[float]]] = {
+            # indexed by round, None where that round's run errored, so
+            # a failure on one side never shifts the later pairs
+            samples: dict[str, dict[str, list[float | None]]] = {
                 n: {"head": [], "ref": []} for n in names
             }
             issues: list[dict] = []
@@ -498,24 +513,29 @@ def run_ab_ref(
                         r = workers[side].send(
                             {"op": "run", "query": n, "sf_dir": sf_dir}
                         )
-                        if "sec" in r:
-                            samples[n][side].append(r["sec"])
+                        samples[n][side].append(r.get("sec"))
+                        if "sec" not in r:
+                            issues.append(
+                                {"query": n, "side": side, "round": i, **r}
+                            )
             calib1 = {
                 s: workers[s].send({"op": "calib"}) for s in ("head", "ref")
             }
             per_q = {}
             for n in names:
-                h, rf = samples[n]["head"], samples[n]["ref"]
+                pairs = _round_pair_ratios(samples[n]["head"], samples[n]["ref"])
+                h = [x for x in samples[n]["head"] if x is not None]
+                rf = [x for x in samples[n]["ref"] if x is not None]
                 per_q[n] = {
                     "head": {
                         "median": round(statistics.median(h), 3) if h else None,
                         "min": min(h) if h else None,
-                        "samples": h,
+                        "samples": samples[n]["head"],
                     },
                     "ref": {
                         "median": round(statistics.median(rf), 3) if rf else None,
                         "min": min(rf) if rf else None,
-                        "samples": rf,
+                        "samples": samples[n]["ref"],
                     },
                 }
                 if h and rf:
@@ -525,6 +545,7 @@ def run_ab_ref(
                     per_q[n]["speedup_vs_ref_min"] = round(
                         min(rf) / max(min(h), 1e-9), 3
                     )
+                if pairs:
                     # the most co-load-robust readout: each round's
                     # head/ref samples ran SECONDS apart, so their ratio
                     # is immune to anything slower-varying than a pair;
@@ -533,11 +554,7 @@ def run_ab_ref(
                     # inflate one side of 2-3 pairs; the remaining clean
                     # pairs agree to a few %)
                     per_q[n]["speedup_vs_ref_pairs"] = round(
-                        statistics.median(
-                            r / max(hh, 1e-9)
-                            for hh, r in zip(h, rf)
-                        ),
-                        3,
+                        statistics.median(pairs), 3
                     )
             record["sections"][sf_dir] = {
                 "queries": per_q,

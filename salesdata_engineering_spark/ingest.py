@@ -13,30 +13,39 @@ everything onto an empty seed frame (main.py:183-204).
 Engine re-expression, Spark-first:
 
 - No download step: Spark reads object-store paths directly.
-- The ledger is a parquet table; "which files are new" is a left-anti
-  join, "already in flight" a left-semi join — not cursor SQL.
-- Union is ``unionByName(allowMissingColumns=True)`` over per-file
+- The ledger is a parquet table; "which files are new" is one filtered
+  latest-status aggregate over it, not cursor SQL.
+- Union is ``unionByName(allowMissingColumns=True)`` over per-header
   frames; the "additional column" fold is kept as an explicit compat
   op (exact name with the space, main.py:195-197).
 - File moves go through the local/Hadoop filesystem module and work on
   any FS the JVM can mount.
 
-Scale: validation probes only CSV headers (1-row scans); the data scan
-is one multi-path ``spark.read.csv`` over all accepted files, so
-Catalyst sees a single source — partition count follows file splits,
-not file count.
+Scale: validation reads only each CSV's first line, through the Hadoop
+FileSystem on the driver (no Spark job). The data scan is one
+multi-path ``spark.read.csv`` per distinct header, typed from the
+header and ``schemas.RAW_SALES_SCHEMA`` — no inference pass — so a
+drop whose files share a header is a single source, and partition
+count follows file splits, not file count. The ledger is read with its
+known schema and filtered to the drop's file names before the latest
+status is resolved, so its driver collect is bounded by the drop, not
+by the ledger's history.
 """
 
 from __future__ import annotations
 
+import csv
 import shutil
 from dataclasses import dataclass, field
 from pathlib import Path
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
+from .fsops import _fs_and_path, fs_exists
 from .functions import fold_extra_columns
+from .schemas import LEDGER_SCHEMA, RAW_SALES_SCHEMA
 
 #: the reference's mandatory-column contract (resources/dev/config.py:40)
 MANDATORY_COLUMNS: tuple[str, ...] = (
@@ -63,9 +72,39 @@ class ValidationResult:
     rejected: dict[str, list[str]] = field(default_factory=dict)  # path -> missing cols
 
 
+#: the characters Java's ``String.trim`` strips (Spark's blank-line test)
+_JAVA_TRIM = "".join(map(chr, range(0x21)))
+
+
 def probe_columns(spark: SparkSession, path: str) -> list[str]:
-    """S1 — header-only schema probe (parity: main.py:113)."""
-    return spark.read.csv(path, header=True).columns
+    """S1 — header probe (parity: main.py:113): the column names
+    ``spark.read.csv(path, header=True).columns`` gives, without a Spark
+    job. The first non-blank line is read through the Hadoop FileSystem
+    (so every scheme a Spark read reaches works) and parsed with ``csv``;
+    a leading UTF-8 BOM is dropped, and empty or duplicate names are
+    renamed the way Spark's CSV reader renames them."""
+    fs, hpath = _fs_and_path(spark, path)
+    stream = fs.open(hpath)
+    try:
+        # DataInputStream.readLine maps each byte to one char (latin-1),
+        # so the bytes come back intact and are decoded here as UTF-8
+        raw = stream.readLine()
+        if raw is not None:
+            raw = raw.removeprefix("\xef\xbb\xbf")  # UTF-8 BOM
+        while raw is not None and not raw.strip(_JAVA_TRIM):
+            raw = stream.readLine()
+    finally:
+        stream.close()
+    if raw is None:
+        return []
+    names = next(csv.reader([raw.encode("latin-1").decode("utf-8", "replace")]))
+    case_sensitive = spark.conf.get("spark.sql.caseSensitive", "false") == "true"
+    keys = [n if case_sensitive else n.lower() for n in names]
+    dups = {k for k in keys if keys.count(k) > 1}
+    return [
+        f"_c{i}" if not n else f"{n}{i}" if k in dups else n
+        for i, (n, k) in enumerate(zip(names, keys))
+    ]
 
 
 def validate_files(
@@ -98,6 +137,29 @@ def route_rejected(rejected: dict[str, list[str]], error_dir: str) -> list[str]:
     return moved
 
 
+def _read_group(
+    spark: SparkSession,
+    paths: list[str],
+    header: list[str],
+    mandatory: tuple[str, ...],
+) -> DataFrame:
+    """One scan of files sharing ``header``, typed from it in header
+    order (mandatory columns from the contract, surplus ones STRING),
+    then the extra-column fold."""
+    typed = {f.name: f.dataType for f in RAW_SALES_SCHEMA if f.name in mandatory}
+    schema = T.StructType([T.StructField(c, typed.get(c, T.StringType())) for c in header])
+    extra = [c for c in header if c not in mandatory]
+    fold = fold_extra_columns(extra) if extra else F.lit(None).cast("string")
+    # enforceSchema keeps its default: each scan task still compares its
+    # file's header with the schema and logs a mismatch, while
+    # enforceSchema=false would fail every file whose header Spark
+    # renames (empty or duplicate names: "note,note" -> note8, note9)
+    df = spark.read.csv(paths, header=True, schema=schema)
+    # df[c] takes one py4j call per column; a name passed to select goes
+    # through F.col, several times slower (this layer is py4j and planning time)
+    return df.select(*(df[c] for c in mandatory), fold.alias(ADDITIONAL_COLUMN))
+
+
 def read_with_fold(
     spark: SparkSession,
     path: str,
@@ -108,14 +170,16 @@ def read_with_fold(
     Surplus columns' VALUES are comma-joined per row into the catch-all
     column (schema evolution by stringification — observable reference
     behavior, preserved exactly, space in the name included); missing
-    catch-all when no extras ⇒ NULL literal (main.py:200)."""
-    df = spark.read.csv(path, header=True, inferSchema=True)
-    extra = [c for c in df.columns if c not in mandatory]
-    if extra:
-        df = df.withColumn(ADDITIONAL_COLUMN, fold_extra_columns(extra))
-    else:
-        df = df.withColumn(ADDITIONAL_COLUMN, F.lit(None).cast("string"))
-    return df.select(*mandatory, ADDITIONAL_COLUMN)
+    catch-all when no extras ⇒ NULL literal (main.py:200).
+
+    The file is read with an explicit schema built from its header
+    (``schemas.RAW_SALES_SCHEMA`` types for the mandatory columns), not
+    inferred, so two things differ from the reference's ``inferschema``
+    read: surplus values keep their raw text (``"02139"`` folds as
+    ``"02139"``, not ``"2139"``), and a malformed number in a mandatory
+    column reads as NULL (PERMISSIVE) instead of turning that file's
+    column into strings."""
+    return _read_group(spark, [path], probe_columns(spark, path), mandatory)
 
 
 def read_rows_validated(
@@ -173,10 +237,15 @@ def union_files(
     paths: list[str],
     mandatory: tuple[str, ...] = MANDATORY_COLUMNS,
 ) -> DataFrame:
-    """U1 — union the canonical per-file frames by NAME (replaces the
-    reference's positional union onto an empty JDBC seed frame,
-    main.py:183-204)."""
-    frames = [read_with_fold(spark, p, mandatory) for p in paths]
+    """U1 — union the canonical frames by NAME (replaces the reference's
+    positional union onto an empty JDBC seed frame, main.py:183-204).
+
+    Files are grouped by their exact header; each group is one
+    multi-path scan (see :func:`read_with_fold` for its typing)."""
+    groups: dict[tuple[str, ...], list[str]] = {}
+    for p in paths:
+        groups.setdefault(tuple(probe_columns(spark, p)), []).append(p)
+    frames = [_read_group(spark, ps, list(h), mandatory) for h, ps in groups.items()]
     out = frames[0]
     for f in frames[1:]:
         out = out.unionByName(f, allowMissingColumns=True)
@@ -188,9 +257,9 @@ class FileLedger:
     resources/sql_scripts/table_scripts.sql:1-8 + main.py:39-49,157-174,
     318-334). Status A = in-flight, I = done.
 
-    Append-only log; current status = latest row per file (ts, seq
-    ordering). At scale this is a tiny dimension — broadcast in every
-    join against file lists."""
+    Append-only log (``schemas.LEDGER_SCHEMA``); current status = the
+    row with the highest seq per file. The log grows with history, so
+    reads that serve one drop filter it to that drop's file names first."""
 
     def __init__(self, spark: SparkSession, path: str):
         self.spark = spark
@@ -201,29 +270,28 @@ class FileLedger:
         # in snapshot()'s latest-per-file resolution.
         self._seq = 0
         if self._exists():
-            row = self.spark.read.parquet(self.path).agg(F.max("seq")).first()
+            row = self._log().agg(F.max("seq")).first()
             self._seq = int(row[0] or 0)
 
     def _exists(self) -> bool:
-        try:
-            self.spark.read.parquet(self.path)
-            return True
-        except Exception:
-            return False
+        # existence only: an unreadable ledger must fail its read, not
+        # pass for "no ledger" (every file would look pending again)
+        return fs_exists(self.spark, self.path)
+
+    def _log(self) -> DataFrame:
+        return self.spark.read.schema(LEDGER_SCHEMA).parquet(self.path)
+
+    @staticmethod
+    def _latest(log: DataFrame) -> DataFrame:
+        return log.groupBy("file_name").agg(
+            F.max_by("status", "seq").alias("status"), F.max("seq").alias("seq")
+        )
 
     def snapshot(self) -> DataFrame:
         """Latest status per file (empty frame if no ledger yet)."""
         if not self._exists():
-            return self.spark.createDataFrame([], "file_name string, status string, seq long")
-        log = self.spark.read.parquet(self.path)
-        from pyspark.sql import Window
-
-        w = Window.partitionBy("file_name").orderBy(F.col("seq").desc())
-        return (
-            log.withColumn("_rn", F.row_number().over(w))
-            .filter(F.col("_rn") == 1)
-            .select("file_name", "status", "seq")
-        )
+            return self.spark.createDataFrame([], LEDGER_SCHEMA)
+        return self._latest(self._log())
 
     def record(self, files: list[str], status: str) -> None:
         """INSERT/UPDATE equivalent: append (file, status, seq) rows.
@@ -235,22 +303,25 @@ class FileLedger:
         same as for any append-log table."""
         self._seq += 1
         rows = [(Path(f).name, status, self._seq) for f in files]
-        self.spark.createDataFrame(rows, "file_name string, status string, seq long").write.mode(
-            "append"
-        ).parquet(self.path)
+        self.spark.createDataFrame(rows, LEDGER_SCHEMA).write.mode("append").parquet(self.path)
 
     def in_flight(self) -> DataFrame:
         return self.snapshot().filter(F.col("status") == STATUS_ACTIVE).select("file_name")
 
     def pending(self, files: list[str]) -> list[str]:
-        """Files never completed: anti-join against status I
-        (the relational form of main.py:39-49's cursor check)."""
-        names = self.spark.createDataFrame(
-            [(Path(f).name, f) for f in files], "file_name string, path string"
-        )
-        done = self.snapshot().filter(F.col("status") == STATUS_DONE).select("file_name")
-        keep = names.join(F.broadcast(done), "file_name", "left_anti")
-        return [r.path for r in keep.collect()]
+        """Files never completed (the relational form of main.py:39-49's
+        cursor check). The log is cut to these files' names before the
+        latest status is resolved, so only the done names among them
+        reach the driver."""
+        if not files or not self._exists():
+            return list(files)
+        names = sorted({Path(f).name for f in files})
+        latest = self._latest(self._log().filter(F.col("file_name").isin(names)))
+        done = {
+            r.file_name
+            for r in latest.filter(F.col("status") == STATUS_DONE).select("file_name").collect()
+        }
+        return [f for f in files if Path(f).name not in done]
 
 
 @dataclass

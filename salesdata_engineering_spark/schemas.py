@@ -4,81 +4,52 @@ The reference validates incoming daily sales CSVs against a fixed
 mandatory-column contract (`resources/dev/config.py:40`) and tolerates
 extra columns by folding them into a single string column literally named
 ``"additional column"`` (`src/main/transformations/jobs/main.py:189-202`).
-This module pins those contracts as explicit StructTypes — the engine never
-relies on ``inferSchema`` for production reads.
+The column contract and the fold live in ``ingest``; this module pins the
+types as explicit StructTypes — the engine never relies on ``inferSchema``
+for production reads.
 
-Money travels as DECIMAL(18,2): the reference mixes CSV-inferred doubles
+Money aggregates as DECIMAL(18,2): the reference mixes CSV-inferred doubles
 with MySQL DECIMAL(10,2) DDL (`resources/sql_scripts/table_scripts.sql:72-73`);
-we standardize on decimal at the boundary so aggregation is exact and
-order-independent — which is also what makes the DuckDB differential oracle
-hash-stable (float sums are order-dependent; decimal sums are not).
+the marts round each sum to cents and cast it to ``MONEY``, and the
+testdata fact carries ``MONEY`` from the parquet boundary on — which is
+also what makes the DuckDB differential oracle hash-stable (float sums are
+order-dependent; decimal sums are not).
 """
 
 from __future__ import annotations
 
 from pyspark.sql import types as T
 
-#: Mandatory columns every incoming sales file must carry
-#: (parity: resources/dev/config.py:40).
-MANDATORY_SALES_COLUMNS: list[str] = [
-    "customer_id",
-    "store_id",
-    "product_name",
-    "sales_date",
-    "sales_person_id",
-    "price",
-    "quantity",
-    "total_cost",
-]
-
-#: Name of the catch-all column extra CSV columns are folded into.
-#: The reference uses a literal space in the name (`main.py:195`): we keep
-#: that exact observable name in the compat path.
-ADDITIONAL_COLUMN = "additional column"
-
 MONEY = T.DecimalType(18, 2)
 
-#: Canonical 9-column fact schema after ingestion
-#: (8 mandatory + the additional-column fold).
-SALES_SCHEMA = T.StructType(
-    [
-        T.StructField("customer_id", T.IntegerType()),
-        T.StructField("store_id", T.IntegerType()),
-        T.StructField("product_name", T.StringType()),
-        T.StructField("sales_date", T.StringType()),  # yyyy-MM-dd, string in CSV
-        T.StructField("sales_person_id", T.IntegerType()),
-        T.StructField("price", MONEY),
-        T.StructField("quantity", T.IntegerType()),
-        T.StructField("total_cost", MONEY),
-        T.StructField(ADDITIONAL_COLUMN, T.StringType()),
-    ]
-)
-
-#: CSV read schema for a *valid* raw file (before the fold): mandatory
-#: columns only; extra columns are discovered from the header probe.
+#: CSV read contract for the mandatory sales columns (ingest.union_files
+#: types each file's header from it; surplus columns read as STRING).
+#: Money is DOUBLE at read time, not MONEY: landing files carry more than
+#: two decimals (total_cost = price * (1 - discount), e.g. 57000.6892), and
+#: a DECIMAL(18,2) read would round every row before the sum. The marts
+#: cast to MONEY only after ``round(sum, 2)``.
 RAW_SALES_SCHEMA = T.StructType(
     [
         T.StructField("customer_id", T.IntegerType()),
         T.StructField("store_id", T.IntegerType()),
         T.StructField("product_name", T.StringType()),
-        T.StructField("sales_date", T.StringType()),
+        T.StructField("sales_date", T.DateType()),
         T.StructField("sales_person_id", T.IntegerType()),
-        T.StructField("price", MONEY),
+        T.StructField("price", T.DoubleType()),
         T.StructField("quantity", T.IntegerType()),
-        T.StructField("total_cost", MONEY),
+        T.StructField("total_cost", T.DoubleType()),
     ]
 )
 
-#: File-processing ledger (parity: product_staging_table,
+#: File-processing ledger as ingest.FileLedger writes it: an append-only
+#: log of (file, status, seq) rows (parity: product_staging_table,
 #: resources/sql_scripts/table_scripts.sql:1-8). Status 'A' = in-flight,
-#: 'I' = done.
+#: 'I' = done; the latest seq per file is its current status.
 LEDGER_SCHEMA = T.StructType(
     [
-        T.StructField("file_name", T.StringType(), False),
-        T.StructField("file_location", T.StringType()),
-        T.StructField("created_date", T.TimestampType()),
-        T.StructField("updated_date", T.TimestampType()),
-        T.StructField("status", T.StringType(), False),
+        T.StructField("file_name", T.StringType()),
+        T.StructField("status", T.StringType()),
+        T.StructField("seq", T.LongType()),
     ]
 )
 

@@ -5,9 +5,11 @@ main.py:33-204 pipeline as observable behavior."""
 
 from __future__ import annotations
 
+from datetime import date
 from pathlib import Path
 
 import pytest
+from py4j.protocol import Py4JJavaError
 from pyspark.sql import functions as F
 
 from salesdata_engineering_spark.ingest import (
@@ -15,6 +17,7 @@ from salesdata_engineering_spark.ingest import (
     STATUS_DONE,
     FileLedger,
     ingest_batch,
+    probe_columns,
     read_with_fold,
     union_files,
     validate_files,
@@ -97,6 +100,128 @@ def test_ingest_batch_end_to_end_with_ledger_and_rerun(spark, tmp_path, landing)
     (landing / "sales_data_2024-01-03.csv").write_text(VALID_CSV)
     df3, report3 = ingest_batch(spark, str(landing), str(error_dir), ledger)
     assert len(report3.accepted) == 1 and report3.rows == 2
+
+
+def _jobs_in(spark, group: str, fn):
+    """(fn's result, number of Spark jobs it ran), counted through a job
+    group as in test_ann_index's compaction pin."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, "ingest job-count pin")
+    try:
+        out = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_ingest_job_count_pin(spark, tmp_path, landing):
+    """Header probes and the header-typed scans run no Spark job, and a
+    whole ingest stays within 5 (ledger 2, in-flight mark 1, row count
+    2) — an inferSchema read or a parquet schema-inference read of the
+    ledger would show up here."""
+    paths = sorted(str(p) for p in landing.glob("*.csv"))
+    res, n = _jobs_in(spark, "pin-validate", lambda: validate_files(spark, paths))
+    assert n == 0 and len(res.ok) == 2
+    _, n = _jobs_in(spark, "pin-union", lambda: union_files(spark, res.ok))
+    assert n == 0
+
+    ledger = FileLedger(spark, str(tmp_path / "ledger"))
+    err = str(tmp_path / "errors")
+    (_, report), n = _jobs_in(
+        spark, "pin-ingest-new", lambda: ingest_batch(spark, str(landing), err, ledger)
+    )
+    assert len(report.accepted) == 2 and n <= 5, n
+    ledger.record(report.accepted, STATUS_DONE)
+    (landing / "sales_data_2024-01-03.csv").write_text(VALID_CSV)
+    (_, report), n = _jobs_in(
+        spark, "pin-ingest-rerun", lambda: ingest_batch(spark, str(landing), err, ledger)
+    )
+    assert len(report.accepted) == 1 and n <= 5, n
+
+
+@pytest.mark.parametrize(
+    "text",
+    [
+        '"customer_id","store_id","a,b"\n1,2,3\n',
+        "\ufeffcustomer_id,store_id\n1,2\n",
+        "customer_id,store_id\n",
+        "",
+        "\n  \r\ncustomer_id,caf\u00e9\r\n1,2\r\n",
+        "a,A,b,,a\n1,2,3,4,5\n",
+    ],
+    ids=["quoted", "utf8_bom", "header_only", "empty", "blank_lead_crlf", "dup_and_empty"],
+)
+def test_probe_columns_matches_spark_header(spark, tmp_path, text):
+    p = tmp_path / "probe.csv"
+    p.write_bytes(text.encode("utf-8"))
+    assert probe_columns(spark, str(p)) == spark.read.csv(str(p), header=True).columns
+
+
+def test_union_permuted_headers_by_name(spark, tmp_path):
+    """Files with the same columns in another order are read as separate
+    header groups and unioned by name, with the contract's types."""
+    a = tmp_path / "a.csv"
+    a.write_text(VALID_CSV)
+    b = tmp_path / "b.csv"
+    b.write_text(
+        "total_cost,quantity,price,sales_person_id,sales_date,product_name,store_id,customer_id\n"
+        "57000.6892,3,19000.2297,7,2024-01-09,ghee,124,42\n"
+    )
+    df = union_files(spark, [str(a), str(b)])
+    assert df.schema.simpleString() == (
+        "struct<customer_id:int,store_id:int,product_name:string,sales_date:date,"
+        "sales_person_id:int,price:double,quantity:int,total_cost:double,"
+        "additional column:string>"
+    )
+    row = df.filter(F.col("customer_id") == 42).collect()
+    assert [tuple(r) for r in row] == [
+        (42, 124, "ghee", date(2024, 1, 9), 7, 19000.2297, 3, 57000.6892, None)
+    ]
+    assert df.count() == 3
+
+
+def test_read_keeps_surplus_text_and_nulls_malformed_numbers(spark, tmp_path):
+    """The two deliberate departures from an inferSchema read: surplus
+    values fold as their raw text (inference gave "2139"), and a
+    malformed number reads as NULL under PERMISSIVE (inference turned the
+    whole column into strings)."""
+    p = tmp_path / "odd.csv"
+    p.write_text(
+        "customer_id,store_id,product_name,sales_date,sales_person_id,price,quantity,total_cost,zip\n"
+        "1,121,oats,2024-01-01,1,10.5,n/a,21.0,02139\n"
+        "2,121,milk,2024-01-01,1,4.0,2,8.0,10001\n"
+    )
+    df = read_with_fold(spark, str(p))
+    assert dict(df.dtypes)["quantity"] == "int"
+    rows = {r.customer_id: (r.quantity, r[ADDITIONAL_COLUMN]) for r in df.collect()}
+    assert rows == {1: (None, "02139"), 2: (2, "10001")}
+
+
+def test_duplicate_surplus_names_still_fold(spark, tmp_path):
+    """Header names Spark renames (here note8, note9) must not make the
+    schema-pinned scan reject the file."""
+    p = tmp_path / "dup.csv"
+    p.write_text(
+        "customer_id,store_id,product_name,sales_date,sales_person_id,price,quantity,total_cost,note,note\n"
+        "1,121,oats,2024-01-01,1,10.5,2,21.0,a,b\n"
+    )
+    [row] = union_files(spark, [str(p)]).collect()
+    assert row[ADDITIONAL_COLUMN] == "a, b"
+
+
+def test_corrupt_ledger_raises_instead_of_reading_as_empty(spark, tmp_path):
+    """A ledger whose part file is truncated must fail pending(), not pass
+    for "no ledger" — that would re-ingest every completed file."""
+    path = tmp_path / "ledger_corrupt"
+    ledger = FileLedger(spark, str(path))
+    ledger.record(["a.csv", "b.csv"], STATUS_DONE)
+    assert ledger.pending(["a.csv", "c.csv"]) == ["c.csv"]
+    part = sorted(path.glob("part-*.parquet"))[0]
+    part.write_bytes(part.read_bytes()[: part.stat().st_size // 2])
+    for crc in path.glob(f".{part.name}.crc"):
+        crc.unlink()  # leave the parquet reader itself to notice
+    with pytest.raises(Py4JJavaError, match="FAILED_READ_FILE"):
+        ledger.pending(["a.csv", "c.csv"])
 
 
 def test_compact_parquet_merges_small_files(spark, tmp_path):
