@@ -48,20 +48,53 @@ from __future__ import annotations
 import hashlib
 import os
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, Row, SparkSession
 from pyspark.sql import functions as F
 
-from ..ops.partitioning import spread as _spread
 from .similarity import (
-    _assign_cells,
+    _adc_candidates,
+    _cell_codes,
     _exact_rerank,
     _local_centroids,
-    _pq_chunks_expr,
     _pq_codebooks,
-    _pq_encode,
     _pq_query_tables,
-    norm_fold,
+    _probe_cells,
+    _strided_centroids,
+    _with_norms,
 )
+
+#: The index artifacts' schemas, fixed by build_ivf_pq_index at write
+#: time (meta is written with exactly the _META_SCHEMA DDL; centroids
+#: carry the corpus vector cast to array<double>; codebooks are the
+#: _pq_codebooks projection). Passing them at read time skips the
+#: per-serve footer schema inference on every artifact (guide §5).
+_META_SCHEMA = (
+    "dim int, n_sub int, n_codes int, stride int, n bigint, id_col string"
+)
+_CENTROIDS_SCHEMA = "cid bigint, _cvec array<double>"
+_CODEBOOKS_SCHEMA = "s int, c int, _cchunk array<double>, _cc double"
+
+
+def _read_meta(spark: SparkSession, index_dir: str) -> Row:
+    """The index's one-row build record."""
+    return spark.read.schema(_META_SCHEMA).parquet(f"{index_dir}/meta").collect()[0]
+
+
+def _read_centroids(spark: SparkSession, index_dir: str, dim: int) -> DataFrame:
+    """The persisted centroids with norms, broadcast."""
+    return F.broadcast(
+        _with_norms(
+            spark.read.schema(_CENTROIDS_SCHEMA).parquet(f"{index_dir}/centroids"),
+            dim,
+        )
+    )
+
+
+def _read_codebooks(spark: SparkSession, index_dir: str) -> DataFrame:
+    """The persisted PQ codebooks, broadcast."""
+    return F.broadcast(
+        spark.read.schema(_CODEBOOKS_SCHEMA).parquet(f"{index_dir}/codebooks")
+    )
 
 
 def build_ivf_pq_index(
@@ -88,25 +121,13 @@ def build_ivf_pq_index(
     from ..fsops import _fs_and_path
 
     n = corpus.count() if corpus_count is None else corpus_count
-    centroids = corpus.filter(F.col(id_col) % stride == 0).select(
-        F.col(id_col).alias("cid"), F.col(vec_col).alias("_cvec")
-    )
     # collected local relation (r15, see similarity._local_broadcast):
     # the cell assignment references cents and the centroids parquet
     # write below reads the same sample — collecting once means the
     # strided-centroid corpus scan runs exactly once per build
-    cents = _local_centroids(centroids, dim)
-    cells = _assign_cells(
-        _spread(corpus).select(id_col, vec_col), cents, id_col, 1, vec_col, dim
-    )
-    chunks = _pq_chunks_expr(n_sub, dim // n_sub)
-    cents_b = _pq_codebooks(corpus, n_codes, chunks, id_col, vec_col, n=n)
-    corpus_chunks = cells.select(
-        F.col(id_col),
-        "cid",
-        F.posexplode(F.expr(chunks.format(v=vec_col))).alias("s", "_vchunk"),
-    )
-    enc = _pq_encode(corpus_chunks, cents_b, [id_col, "cid"])
+    cents = _local_centroids(_strided_centroids(corpus, stride, id_col, vec_col), dim)
+    cents_b = _pq_codebooks(corpus, n_codes, n_sub, dim, id_col, vec_col, n=n)
+    enc = _cell_codes(corpus, cents, cents_b, n_sub, dim, id_col, vec_col)
 
     new_dir = f"{index_dir}.new"
     fs, live_p = _fs_and_path(spark, index_dir)
@@ -122,8 +143,7 @@ def build_ivf_pq_index(
         "cid"
     ).parquet(f"{new_dir}/codes")
     spark.createDataFrame(
-        [(dim, n_sub, n_codes, stride, n, id_col)],
-        "dim int, n_sub int, n_codes int, stride int, n bigint, id_col string",
+        [(dim, n_sub, n_codes, stride, n, id_col)], _META_SCHEMA
     ).write.mode("overwrite").parquet(f"{new_dir}/meta")
     cents_b.select("s", "c", "_cchunk", "_cc").write.mode("overwrite").parquet(
         f"{new_dir}/codebooks"
@@ -134,18 +154,6 @@ def build_ivf_pq_index(
     if not fs.rename(new_p, live_p):
         raise IOError(f"publish failed: rename {new_dir} -> {index_dir}")
     return index_dir
-
-
-#: The index artifacts' schemas, fixed by build_ivf_pq_index at write
-#: time (meta is written with exactly the _META_SCHEMA DDL; centroids
-#: carry the corpus vector cast to array<double>; codebooks are the
-#: _pq_codebooks projection). Passing them at read time skips the
-#: per-serve footer schema inference on every artifact (guide §5).
-_META_SCHEMA = (
-    "dim int, n_sub int, n_codes int, stride int, n bigint, id_col string"
-)
-_CENTROIDS_SCHEMA = "cid bigint, _cvec array<double>"
-_CODEBOOKS_SCHEMA = "s int, c int, _cchunk array<double>, _cc double"
 
 
 def _read_probed_codes(
@@ -245,20 +253,11 @@ def search_ivf_pq_index(
     # tree, a full partition-discovery listing of EVERY cell — a
     # listing job past the 32-path parallel-discovery threshold; at
     # production cell counts that is thousands of paths per serve).
-    meta = (
-        spark.read.schema(_META_SCHEMA).parquet(f"{index_dir}/meta").collect()[0]
-    )
+    meta = _read_meta(spark, index_dir)
     dim, n_sub = meta["dim"], meta["n_sub"]
-    cents_raw = spark.read.schema(_CENTROIDS_SCHEMA).parquet(
-        f"{index_dir}/centroids"
-    )
-    cents = F.broadcast(
-        cents_raw.select("cid", "_cvec", norm_fold("_cvec", dim).alias("_cn"))
-    )
-    probes = _assign_cells(
-        queries.select(F.col(query_id_col), F.col(vec_col)),
-        cents, query_id_col, nprobe, vec_col, dim,
-        tiny=small_queries, with_vec=False,
+    probes = _probe_cells(
+        queries, _read_centroids(spark, index_dir, dim), nprobe, small_queries,
+        query_id_col, vec_col, dim,
     )
     probe_rows = probes.collect()  # bounded: |Q| · nprobe rows
     probe_cids = sorted({r["cid"] for r in probe_rows})
@@ -266,23 +265,12 @@ def search_ivf_pq_index(
     # so the probe subtree is not recomputed for the join below
     probes_b = F.broadcast(spark.createDataFrame(probe_rows, probes.schema))
     codes = _read_probed_codes(spark, index_dir, corpus, id_col, probe_cids)
-    cb = F.broadcast(
-        spark.read.schema(_CODEBOOKS_SCHEMA).parquet(f"{index_dir}/codebooks")
-    )
-    chunks = _pq_chunks_expr(n_sub, dim // n_sub)
-    dt = _pq_query_tables(queries, cb, chunks, query_id_col, vec_col)
-    dtp = dt.withColumnRenamed("c", "code").join(probes_b, query_id_col)
-    adc = (
-        codes.join(F.broadcast(dtp), ["cid", "s", "code"])
-        .filter(F.col(id_col) != F.col(query_id_col))
-        .groupBy(query_id_col, id_col)
-        .agg(F.sum("_qd").alias("_adc"))
-    )
-    wq = Window.partitionBy(query_id_col).orderBy("_adc", id_col)
-    cand = (
-        adc.withColumn("_rk", F.row_number().over(wq))
-        .filter(F.col("_rk") <= m_cand)
-        .select(query_id_col, id_col)
+    dtp = _pq_query_tables(
+        queries, _read_codebooks(spark, index_dir), n_sub, dim, query_id_col,
+        vec_col,
+    ).join(probes_b, query_id_col)
+    cand = _adc_candidates(
+        codes, dtp, ["cid", "s", "code"], m_cand, id_col, query_id_col
     )
     return _exact_rerank(
         cand, corpus, queries, k, id_col, vec_col, query_id_col, dim
@@ -316,31 +304,14 @@ def encode_batch_for_index(
     the registered query derives the batch predicate from the same
     stride/step arithmetic the build uses.
     """
-    meta = (
-        spark.read.schema(_META_SCHEMA).parquet(f"{index_dir}/meta").collect()[0]
-    )
+    meta = _read_meta(spark, index_dir)
     dim, n_sub = meta["dim"], meta["n_sub"]
     id_col = id_col or meta["id_col"]
-    cents = F.broadcast(
-        spark.read.schema(_CENTROIDS_SCHEMA)
-        .parquet(f"{index_dir}/centroids")
-        .select("cid", "_cvec", norm_fold("_cvec", dim).alias("_cn"))
+    enc = _cell_codes(
+        batch, _read_centroids(spark, index_dir, dim),
+        _read_codebooks(spark, index_dir), n_sub, dim, id_col, vec_col,
     )
-    cells = _assign_cells(
-        _spread(batch).select(id_col, vec_col), cents, id_col, 1, vec_col, dim
-    )
-    chunks = _pq_chunks_expr(n_sub, dim // n_sub)
-    cb = F.broadcast(
-        spark.read.schema(_CODEBOOKS_SCHEMA).parquet(f"{index_dir}/codebooks")
-    )
-    batch_chunks = cells.select(
-        F.col(id_col),
-        "cid",
-        F.posexplode(F.expr(chunks.format(v=vec_col))).alias("s", "_vchunk"),
-    )
-    return _pq_encode(batch_chunks, cb, [id_col, "cid"]).select(
-        id_col, "s", "code", "cid"
-    )
+    return enc.select(id_col, "s", "code", "cid")
 
 
 def append_ivf_pq_index(
@@ -395,9 +366,7 @@ def index_counts(spark: SparkSession, index_dir: str) -> dict:
     item 5b). Each indexed vector contributes exactly ``n_sub`` coded
     rows, so the id count is ``count(codes) / n_sub`` — a parquet
     footer-metadata count, no data scan."""
-    meta = (
-        spark.read.schema(_META_SCHEMA).parquet(f"{index_dir}/meta").collect()[0]
-    )
+    meta = _read_meta(spark, index_dir)
     indexed = spark.read.parquet(f"{index_dir}/codes").count() // meta["n_sub"]
     return {"meta_n": meta["n"], "indexed_n": indexed}
 

@@ -52,15 +52,6 @@ def exact_dedup(df: DataFrame, text_col: str = "text", id_col: str = "doc_id") -
     )
 
 
-def shingle_array_expr(text_col: str, n: int) -> str:
-    """SQL expr: distinct word n-gram shingle array (no explode)."""
-    sp = f"split({text_col}, '\\\\s+')"
-    return (
-        f"array_distinct(transform(sequence(1, greatest(size({sp}) - {n - 1}, 1)), "
-        f"i -> concat_ws(' ', slice({sp}, i, {n}))))"
-    )
-
-
 def word_shingles(df: DataFrame, text_col: str, id_col: str, n: int) -> DataFrame:
     """Distinct word n-gram shingles per document: (id, shingle).
 
@@ -265,15 +256,6 @@ def _sig_cols(sh: DataFrame, k: int) -> DataFrame:
     )
 
 
-def minhash_sig_expr(shingles_expr: str, k: int) -> str:
-    """SQL expr: array of k MinHash values over a shingle-array expr."""
-    base = "pmod(cast(conv(substr(md5(s), 1, 15), 16, 10) as bigint), " + str(MINHASH_P) + ")"
-    return (
-        f"transform(sequence(0, {k - 1}), h -> array_min(transform({shingles_expr}, "
-        f"s -> pmod({base} * (2*h+3) + h*h + 1, {MINHASH_P}))))"
-    )
-
-
 def _minhash_docs(
     df: DataFrame,
     text_col: str,
@@ -394,20 +376,6 @@ def simhash(
         ).alias("simhash")
     )
     return fp.select(F.col("id").alias(id_col), "simhash")
-
-
-def simhash_dup_pairs(df: DataFrame, text_col: str = "text", id_col: str = "doc_id", bits: int = 32) -> DataFrame:
-    """Exact-fingerprint SimHash collisions (Hamming distance 0) — the
-    scalable join is on the fingerprint itself. Banded multi-probe
-    (split fingerprint into 4 bands, join per band, verify Hamming ≤ d)
-    generalizes this to d>0 without pairwise comparison."""
-    fp = simhash(df, text_col, id_col, bits)
-    a, b = fp.alias("a"), fp.alias("b")
-    return (
-        a.join(b, (F.col("a.simhash") == F.col("b.simhash"))
-               & (F.col(f"a.{id_col}") < F.col(f"b.{id_col}")))
-        .select(F.col(f"a.{id_col}").alias("id_a"), F.col(f"b.{id_col}").alias("id_b"), F.col("a.simhash").alias("simhash"))
-    )
 
 
 def connected_components(

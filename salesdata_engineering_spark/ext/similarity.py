@@ -100,14 +100,27 @@ def cosine(a: Column | str, b: Column | str, dim: int | None = None) -> Column:
     return dot(a, b, dim) / (norm(a, dim) * norm(b, dim))
 
 
-def _as_double(df: DataFrame, vec_col: str) -> DataFrame:
-    return df.withColumn(vec_col, F.col(vec_col).cast("array<double>"))
-
-
 # Shared with the relational operators (ops/partitioning.py): the
 # pair-scan stream side of the ANN kernels needs the same guard — a
 # broadcast nested-loop over a 1-partition stream runs in ONE task.
 from ..ops.partitioning import spread as _spread  # noqa: E402
+
+
+def _rank_topk(sim: DataFrame, k: int, id_col: str, query_id_col: str) -> DataFrame:
+    """Per-query top ``k`` of a (query_id, id, _sim) frame, ties to the
+    lower id: (query_id, neighbor_id, rk, cosine_sim) — the output
+    contract of every top-k in this module."""
+    w = Window.partitionBy(query_id_col).orderBy(F.col("_sim").desc(), F.col(id_col))
+    return (
+        sim.withColumn("rk", F.row_number().over(w))
+        .filter(F.col("rk") <= k)
+        .select(
+            query_id_col,
+            F.col(id_col).alias("neighbor_id"),
+            "rk",
+            F.round("_sim", 6).alias("cosine_sim"),
+        )
+    )
 
 
 def cosine_topk(
@@ -138,17 +151,7 @@ def cosine_topk(
         id_col,
         (dot(vec_col, "_qvec", dim) / (F.col("_cn") * F.col("_qn"))).alias("_sim"),
     )
-    w = Window.partitionBy(query_id_col).orderBy(F.col("_sim").desc(), F.col(id_col))
-    return (
-        sim.withColumn("rk", F.row_number().over(w))
-        .filter(F.col("rk") <= k)
-        .select(
-            query_id_col,
-            F.col(id_col).alias("neighbor_id"),
-            "rk",
-            F.round("_sim", 6).alias("cosine_sim"),
-        )
-    )
+    return _rank_topk(sim, k, id_col, query_id_col)
 
 
 def hyperplane(dim: int, h: int) -> list[float]:
@@ -237,12 +240,7 @@ def lsh_ann_topk(
         .dropDuplicates([query_id_col, id_col])
     )
     sim = cand.select(query_id_col, id_col, cosine(vec_col, "_qvec", dim).alias("_sim"))
-    w = Window.partitionBy(query_id_col).orderBy(F.col("_sim").desc(), F.col(id_col))
-    return (
-        sim.withColumn("rk", F.row_number().over(w))
-        .filter(F.col("rk") <= k)
-        .select(query_id_col, F.col(id_col).alias("neighbor_id"), "rk", F.round("_sim", 6).alias("cosine_sim"))
-    )
+    return _rank_topk(sim, k, id_col, query_id_col)
 
 
 def embedding_near_dup_pairs(
@@ -425,6 +423,56 @@ def _assign_cells(
     return picked.join(df, out_id).select(out_id, vec_col, "cid")
 
 
+def _strided_centroids(corpus: DataFrame, stride: int, id_col: str, vec_col: str) -> DataFrame:
+    """(cid, _cvec): every ``stride``-th corpus vector by id — the
+    deterministic default IVF centroids the DuckDB oracle rebuilds, and
+    the init of :func:`ivf_train_centroids`."""
+    return corpus.filter(F.col(id_col) % stride == 0).select(
+        F.col(id_col).alias("cid"), F.col(vec_col).alias("_cvec")
+    )
+
+
+def _with_norms(centroids: DataFrame, dim: int) -> DataFrame:
+    """(cid, _cvec, _cn): centroids with the norm ``_assign_cells``
+    divides by."""
+    return centroids.select("cid", "_cvec", norm_fold("_cvec", dim).alias("_cn"))
+
+
+def _ivf_centroids(
+    corpus: DataFrame, centroids: DataFrame | None, stride: int, dim: int,
+    id_col: str, vec_col: str,
+) -> DataFrame:
+    """The in-query IVF centroid frame: ``centroids`` (e.g. trained) or
+    the strided sample, with norms, under a plain broadcast hint — one
+    AQE-reused build pipelined with the query (collecting it was
+    measured slower here; see :func:`_local_broadcast`)."""
+    if centroids is None:
+        centroids = _strided_centroids(corpus, stride, id_col, vec_col)
+    return F.broadcast(_with_norms(centroids, dim))
+
+
+def _assign_corpus(
+    corpus: DataFrame, cents: DataFrame, id_col: str, vec_col: str, dim: int
+) -> DataFrame:
+    """(id, vec, cid): every corpus vector in its ONE nearest cell."""
+    return _assign_cells(
+        _spread(corpus).select(id_col, vec_col), cents, id_col, 1, vec_col, dim
+    )
+
+
+def _probe_cells(
+    queries: DataFrame, cents: DataFrame, nprobe: int, small_queries: bool,
+    query_id_col: str, vec_col: str, dim: int, with_vec: bool = False,
+) -> DataFrame:
+    """(query_id, cid): each query's ``nprobe`` nearest cells —
+    (query_id, vec, cid) with ``with_vec``."""
+    return _assign_cells(
+        queries.select(F.col(query_id_col), F.col(vec_col)),
+        cents, query_id_col, nprobe, vec_col, dim,
+        tiny=small_queries, with_vec=with_vec,
+    )
+
+
 def ivf_ann_topk(
     corpus: DataFrame,
     queries: DataFrame,
@@ -450,20 +498,11 @@ def ivf_ann_topk(
     corpus instead of all of it — the 100 TB path where brute force
     scans everything. Recall is governed by nprobe (measured against
     brute force in tests)."""
-    if centroids is None:
-        centroids = corpus.filter(F.col(id_col) % stride == 0).select(
-            F.col(id_col).alias("cid"), F.col(vec_col).alias("_cvec")
-        )
-    cents = F.broadcast(
-        centroids.select("cid", "_cvec", norm_fold("_cvec", dim).alias("_cn"))
-    )
-
-    cells = _assign_cells(
-        _spread(corpus).select(id_col, vec_col), cents, id_col, 1, vec_col, dim
-    )
-    probes = _assign_cells(
-        queries.select(F.col(query_id_col), F.col(vec_col)),
-        cents, query_id_col, nprobe, vec_col, dim, tiny=small_queries,
+    cents = _ivf_centroids(corpus, centroids, stride, dim, id_col, vec_col)
+    cells = _assign_corpus(corpus, cents, id_col, vec_col, dim)
+    probes = _probe_cells(
+        queries, cents, nprobe, small_queries, query_id_col, vec_col, dim,
+        with_vec=True,
     ).select(query_id_col, F.col(vec_col).alias("_qvec"), "cid")
     cand = (
         cells.join(probes, "cid")
@@ -473,12 +512,7 @@ def ivf_ann_topk(
     sim = cand.select(
         query_id_col, id_col, cosine(vec_col, "_qvec", dim).alias("_sim")
     )
-    w = Window.partitionBy(query_id_col).orderBy(F.col("_sim").desc(), F.col(id_col))
-    return (
-        sim.withColumn("rk", F.row_number().over(w))
-        .filter(F.col("rk") <= k)
-        .select(query_id_col, F.col(id_col).alias("neighbor_id"), "rk", F.round("_sim", 6).alias("cosine_sim"))
-    )
+    return _rank_topk(sim, k, id_col, query_id_col)
 
 
 def quantize_cols(df: DataFrame, vec_col: str, dim: int, prefix: str) -> DataFrame:
@@ -546,16 +580,33 @@ def _exact_rerank(
         )
         .select(query_id_col, id_col, cosine(vec_col, "_qvec", dim).alias("_sim"))
     )
-    w = Window.partitionBy(query_id_col).orderBy(F.col("_sim").desc(), F.col(id_col))
+    return _rank_topk(rr, k, id_col, query_id_col)
+
+
+def _quantized_queries(queries: DataFrame, query_id_col: str, vec_col: str, dim: int) -> DataFrame:
+    """(query_id, _qqv, _qqn): the int8-quantized query side."""
+    q = queries.select(F.col(query_id_col), F.col(vec_col).alias("_qvec"))
+    return quantize_cols(q, "_qvec", dim, "_q").drop("_qvec")
+
+
+#: Exact dot of two quantized arrays (integer-valued doubles).
+_QDOT = (
+    "aggregate(zip_with(_cqv, _qqv, (x, y) -> x * y), 0.0D, (acc, x) -> acc + x)"
+)
+
+
+def _quantized_candidates(pairs: DataFrame, m: int, id_col: str, query_id_col: str) -> DataFrame:
+    """(query_id, id): the top ``m`` corpus ids per query by quantized
+    cosine, over (query, corpus) ``pairs`` carrying the ``_c``/``_q``
+    :func:`quantize_cols` columns. Self-pairs are excluded."""
+    scored = pairs.filter(F.col(id_col) != F.col(query_id_col)).selectExpr(
+        query_id_col, id_col, f"({_QDOT}) / (_cqn * _qqn) AS _qcos"
+    )
+    wq = Window.partitionBy(query_id_col).orderBy(F.col("_qcos").desc(), F.col(id_col))
     return (
-        rr.withColumn("rk", F.row_number().over(w))
-        .filter(F.col("rk") <= k)
-        .select(
-            query_id_col,
-            F.col(id_col).alias("neighbor_id"),
-            "rk",
-            F.round("_sim", 6).alias("cosine_sim"),
-        )
+        scored.withColumn("_qrk", F.row_number().over(wq))
+        .filter(F.col("_qrk") <= m)
+        .select(query_id_col, id_col)
     )
 
 
@@ -589,23 +640,10 @@ def quantized_topk(
     stage-1 window; candidates (|Q|·m rows) join back to the corpus for
     re-rank. :func:`ivf_quantized_topk` is the composed sublinear form:
     the same quantized scan restricted to IVF-probed cells."""
-    q = quantize_cols(
-        queries.select(F.col(query_id_col), F.col(vec_col).alias("_qvec")), "_qvec", dim, "_q"
-    )
     c = quantize_cols(_spread(corpus).select(id_col, vec_col), vec_col, dim, "_c")
-    qdot = ("aggregate(zip_with(_cqv, _qqv, (x, y) -> x * y),"
-            " 0.0D, (acc, x) -> acc + x)")
-    scored = (
-        c.drop(vec_col)
-        .crossJoin(F.broadcast(q.drop("_qvec")))
-        .filter(F.col(id_col) != F.col(query_id_col))
-        .selectExpr(query_id_col, id_col, f"({qdot}) / (_cqn * _qqn) AS _qcos")
-    )
-    wq = Window.partitionBy(query_id_col).orderBy(F.col("_qcos").desc(), F.col(id_col))
-    cand = (
-        scored.withColumn("_qrk", F.row_number().over(wq))
-        .filter(F.col("_qrk") <= m)
-        .select(query_id_col, id_col)
+    q = _quantized_queries(queries, query_id_col, vec_col, dim)
+    cand = _quantized_candidates(
+        c.drop(vec_col).crossJoin(F.broadcast(q)), m, id_col, query_id_col
     )
     return _exact_rerank(
         cand, corpus, queries, k, id_col, vec_col, query_id_col, dim
@@ -654,42 +692,17 @@ def ivf_quantized_topk(
     the serving shape: centroids trained once (:func:`ivf_train_centroids`),
     corpus stored quantized and clustered by cell, full-precision
     vectors fetched only for the |Q|·m re-rank."""
-    if centroids is None:
-        centroids = corpus.filter(F.col(id_col) % stride == 0).select(
-            F.col(id_col).alias("cid"), F.col(vec_col).alias("_cvec")
-        )
-    cents = F.broadcast(
-        centroids.select("cid", "_cvec", norm_fold("_cvec", dim).alias("_cn"))
+    cents = _ivf_centroids(corpus, centroids, stride, dim, id_col, vec_col)
+    cells = _assign_corpus(corpus, cents, id_col, vec_col, dim)
+    probes = _probe_cells(
+        queries, cents, nprobe, small_queries, query_id_col, vec_col, dim
     )
-
-    cells = _assign_cells(
-        _spread(corpus).select(id_col, vec_col), cents, id_col, 1, vec_col, dim
-    )
-    probes = _assign_cells(
-        queries.select(F.col(query_id_col), F.col(vec_col)),
-        cents, query_id_col, nprobe, vec_col, dim,
-        tiny=small_queries, with_vec=False,
-    )
-
     cq = quantize_cols(cells, vec_col, dim, "_c")
-    qq = quantize_cols(
-        queries.select(F.col(query_id_col), F.col(vec_col).alias("_qvec")),
-        "_qvec", dim, "_q",
+    pq = probes.join(
+        _quantized_queries(queries, query_id_col, vec_col, dim), query_id_col
     )
-    pq = probes.join(qq.drop("_qvec"), query_id_col)
-    qdot = ("aggregate(zip_with(_cqv, _qqv, (x, y) -> x * y),"
-            " 0.0D, (acc, x) -> acc + x)")
-    scored = (
-        cq.drop(vec_col)
-        .join(F.broadcast(pq), "cid")
-        .filter(F.col(id_col) != F.col(query_id_col))
-        .selectExpr(query_id_col, id_col, f"({qdot}) / (_cqn * _qqn) AS _qcos")
-    )
-    wq = Window.partitionBy(query_id_col).orderBy(F.col("_qcos").desc(), F.col(id_col))
-    cand = (
-        scored.withColumn("_qrk", F.row_number().over(wq))
-        .filter(F.col("_qrk") <= m)
-        .select(query_id_col, id_col)
+    cand = _quantized_candidates(
+        cq.drop(vec_col).join(F.broadcast(pq), "cid"), m, id_col, query_id_col
     )
     return _exact_rerank(
         cand, corpus, queries, k, id_col, vec_col, query_id_col, dim
@@ -725,16 +738,14 @@ def ivf_train_centroids(
     doubles per pass (measured 8.5 s → ~2 s median at sf0.1 for the
     registered trained-IVF query). Deterministic, so the value oracle
     is unaffected."""
-    cents = corpus.filter(F.col(id_col) % stride == 0).select(
-        F.col(id_col).alias("cid"), F.col(vec_col).alias("_cvec")
-    )
+    cents = _strided_centroids(corpus, stride, id_col, vec_col)
     # spread like the SEARCH path's corpus side: the assignment + mean
     # stages otherwise inherit the source file count as their
     # parallelism (4 files at sf1 → 4 of 32 cores; the r6 profile
     # measured every Lloyd stage at exactly 4 tasks)
     wide = _spread(corpus.select(id_col, vec_col))
     for _ in range(iters):
-        bc = F.broadcast(cents.select("cid", "_cvec", norm_fold("_cvec", dim).alias("_cn")))
+        bc = F.broadcast(_with_norms(cents, dim))
         # shared keep=1 assignment: max_by hash-agg, map-side combine —
         # see _assign_cells for the shape and the window-sort it replaces
         assigned = _assign_cells(
@@ -754,15 +765,16 @@ def ivf_train_centroids(
     return cents
 
 
-def _pq_chunks_expr(n_sub: int, d_sub: int) -> str:
-    """SQL template slicing ``{v}`` into ``n_sub`` subvectors of ``d_sub``."""
-    return (
+def _pq_chunks(vec_col: str, n_sub: int, dim: int) -> Column:
+    """``vec_col`` sliced into ``n_sub`` subvectors of ``dim // n_sub``."""
+    d_sub = dim // n_sub
+    return F.expr(
         f"transform(sequence(0, {n_sub - 1}),"
-        f" s -> slice(`{{v}}`, s * {d_sub} + 1, {d_sub}))"
+        f" s -> slice(`{vec_col}`, s * {d_sub} + 1, {d_sub}))"
     )
 
 
-def _local_broadcast(df: DataFrame, limit: int | None = None) -> tuple:
+def _local_broadcast(df: DataFrame, limit: int | None = None) -> tuple[DataFrame, list]:
     """Materialize a BOUNDED index frame (centroids / PQ codebooks) to
     the driver once and return ``(broadcast local relation, rows)``.
 
@@ -808,7 +820,7 @@ def _local_broadcast(df: DataFrame, limit: int | None = None) -> tuple:
     return F.broadcast(spark.createDataFrame(rows, df.schema)), rows
 
 
-def _local_centroids(centroids: DataFrame, dim: int) -> Column:
+def _local_centroids(centroids: DataFrame, dim: int) -> DataFrame:
     """The broadcast (cid, _cvec, _cn) centroid frame as a collected
     local relation — see :func:`_local_broadcast` for when that pays.
     Used by the PERSISTED-index build, where the same sample otherwise
@@ -818,20 +830,18 @@ def _local_centroids(centroids: DataFrame, dim: int) -> Column:
     measured slower there and reverted, see _local_broadcast). Centroid
     frames are bounded by construction (~min(sqrt N, _IVF_MAX_CELLS)
     rows via the caller's stride; trained frames are the same cells)."""
-    cents = centroids.select(
-        "cid", "_cvec", norm_fold("_cvec", dim).alias("_cn")
-    )
-    return _local_broadcast(cents)[0]
+    return _local_broadcast(_with_norms(centroids, dim))[0]
 
 
 def _pq_codebooks(
     corpus: DataFrame,
     n_codes: int,
-    chunks: str,
+    n_sub: int,
+    dim: int,
     id_col: str,
     vec_col: str,
     n: int | None = None,
-) -> Column:
+) -> DataFrame:
     """Broadcast (s, c, _cchunk, _cc) codebook frame: code c of subspace
     s = the s-th chunk of the corpus vector with id ``c * step``
     (deterministic strided sample — the IVF-centroid idea per subspace),
@@ -883,16 +893,10 @@ def _pq_codebooks(
     cents = (
         sample.select(
             F.expr(f"CAST(`{id_col}` DIV {step} AS INT)").alias("c"),
-            F.posexplode(F.expr(chunks.format(v=vec_col))).alias("s", "_cchunk"),
+            F.posexplode(_pq_chunks(vec_col, n_sub, dim)).alias("s", "_cchunk"),
         )
         .select("s", "c", "_cchunk", dot("_cchunk", "_cchunk").alias("_cc"))
     )
-    # chunks always explodes to the same per-vector row count: read it
-    # from the template (sequence(0, n_sub-1)) so the density arithmetic
-    # can never drift from the explode
-    import re as _re
-
-    n_sub = int(_re.search(r"sequence\(0, (\d+)\)", chunks).group(1)) + 1
     cents_b, rows = _local_broadcast(cents)
     n_found = len(rows) // n_sub
     if n_found != n_codes:
@@ -915,10 +919,17 @@ def _pq_dist_int(vchunk: str) -> Column:
     ).cast("bigint")
 
 
-def _pq_encode(chunked: DataFrame, cents_b: Column, keys: list[str]) -> DataFrame:
-    """argmin-code per (*keys, s): code_s(v) = argmin_c of the quantized
-    cc − 2·dot ranking, ties to the lowest code — one narrow hash
-    aggregate over the (rows × n_codes) scored stream."""
+def _pq_encode(
+    rows: DataFrame, cents_b: DataFrame, n_sub: int, dim: int, vec_col: str, keys: list[str]
+) -> DataFrame:
+    """(*keys, s, code): ``rows``' vectors chunked and PQ-encoded.
+    code_s(v) = argmin_c of the quantized cc − 2·dot ranking, ties to
+    the lowest code — one narrow hash aggregate over the
+    (rows × n_codes) scored stream. Extra ``keys`` functionally
+    dependent on the id (the cell) ride the aggregate for free."""
+    chunked = rows.select(
+        *keys, F.posexplode(_pq_chunks(vec_col, n_sub, dim)).alias("s", "_vchunk")
+    )
     return (
         chunked.join(cents_b, "s")
         .select(*keys, "s", "c", _pq_dist_int("_vchunk").alias("_d"))
@@ -927,17 +938,51 @@ def _pq_encode(chunked: DataFrame, cents_b: Column, keys: list[str]) -> DataFram
     )
 
 
-def _pq_query_tables(
-    queries: DataFrame, cents_b: Column, chunks: str, query_id_col: str, vec_col: str
+def _cell_codes(
+    rows: DataFrame, cents: DataFrame, cents_b: DataFrame, n_sub: int, dim: int,
+    id_col: str, vec_col: str,
 ) -> DataFrame:
-    """Per-query ADC lookup tables: (query_id, s, c, _qd) with _qd the
-    integer-picounit cc − 2·dot term for every (subspace, code)."""
+    """(id, cid, s, code): the IVF-PQ inverted file of ``rows`` — each
+    vector assigned to its cell, then PQ-encoded with the cid carried."""
+    cells = _assign_corpus(rows, cents, id_col, vec_col, dim)
+    return _pq_encode(cells, cents_b, n_sub, dim, vec_col, [id_col, "cid"])
+
+
+def _pq_query_tables(
+    queries: DataFrame, cents_b: DataFrame, n_sub: int, dim: int, query_id_col: str, vec_col: str
+) -> DataFrame:
+    """Per-query ADC lookup tables: (query_id, s, code, _qd) with _qd
+    the integer-picounit cc − 2·dot term for every (subspace, code)."""
     query_chunks = queries.select(
         F.col(query_id_col),
-        F.posexplode(F.expr(chunks.format(v=vec_col))).alias("s", "_qchunk"),
+        F.posexplode(_pq_chunks(vec_col, n_sub, dim)).alias("s", "_qchunk"),
     )
-    return query_chunks.join(cents_b, "s").select(
-        query_id_col, "s", "c", _pq_dist_int("_qchunk").alias("_qd")
+    return (
+        query_chunks.join(cents_b, "s")
+        .select(query_id_col, "s", "c", _pq_dist_int("_qchunk").alias("_qd"))
+        .withColumnRenamed("c", "code")
+    )
+
+
+def _adc_candidates(
+    codes: DataFrame, tables: DataFrame, keys: list[str], m_cand: int, id_col: str,
+    query_id_col: str,
+) -> DataFrame:
+    """(query_id, id): the top ``m_cand`` corpus ids per query by ADC
+    distance — ``codes`` joined to the broadcast lookup ``tables`` on
+    ``keys``, the per-subspace terms summed per (query, id) as exact
+    integers, ties to the lower id. Self-pairs are excluded."""
+    adc = (
+        codes.join(F.broadcast(tables), keys)
+        .filter(F.col(id_col) != F.col(query_id_col))
+        .groupBy(query_id_col, id_col)
+        .agg(F.sum("_qd").alias("_adc"))
+    )
+    wq = Window.partitionBy(query_id_col).orderBy("_adc", id_col)
+    return (
+        adc.withColumn("_rk", F.row_number().over(wq))
+        .filter(F.col("_rk") <= m_cand)
+        .select(query_id_col, id_col)
     )
 
 
@@ -1134,32 +1179,12 @@ def pq_adc_topk(
             dict(k=k, m_cand=m_cand, n_sub=n_sub, n_codes=n_codes,
                  dim=dim, corpus_count=corpus_count),
         )
-    d_sub = dim // n_sub
-    chunks = _pq_chunks_expr(n_sub, d_sub)
     cents_b = _pq_codebooks(
-        corpus, n_codes, chunks, id_col, vec_col, n=corpus_count
+        corpus, n_codes, n_sub, dim, id_col, vec_col, n=corpus_count
     )
-
-    corpus_chunks = _spread(corpus).select(
-        F.col(id_col),
-        F.posexplode(F.expr(chunks.format(v=vec_col))).alias("s", "_vchunk"),
-    )
-    enc = _pq_encode(corpus_chunks, cents_b, [id_col])
-    dt = _pq_query_tables(queries, cents_b, chunks, query_id_col, vec_col)
-    adc = (
-        enc.join(
-            F.broadcast(dt.withColumnRenamed("c", "code")), ["s", "code"]
-        )
-        .filter(F.col(id_col) != F.col(query_id_col))
-        .groupBy(query_id_col, id_col)
-        .agg(F.sum("_qd").alias("_adc"))
-    )
-    wq = Window.partitionBy(query_id_col).orderBy("_adc", id_col)
-    cand = (
-        adc.withColumn("_rk", F.row_number().over(wq))
-        .filter(F.col("_rk") <= m_cand)
-        .select(query_id_col, id_col)
-    )
+    enc = _pq_encode(_spread(corpus), cents_b, n_sub, dim, vec_col, [id_col])
+    dt = _pq_query_tables(queries, cents_b, n_sub, dim, query_id_col, vec_col)
+    cand = _adc_candidates(enc, dt, ["s", "code"], m_cand, id_col, query_id_col)
     return _exact_rerank(
         cand, corpus, queries, k, id_col, vec_col, query_id_col, dim
     )
@@ -1227,53 +1252,23 @@ def ivf_pq_topk(
                  small_queries=small_queries, corpus_count=corpus_count,
                  centroids=centroids),
         )
-    if centroids is None:
-        centroids = corpus.filter(F.col(id_col) % stride == 0).select(
-            F.col(id_col).alias("cid"), F.col(vec_col).alias("_cvec")
-        )
-    cents = F.broadcast(
-        centroids.select("cid", "_cvec", norm_fold("_cvec", dim).alias("_cn"))
+    cents = _ivf_centroids(corpus, centroids, stride, dim, id_col, vec_col)
+    probes = _probe_cells(
+        queries, cents, nprobe, small_queries, query_id_col, vec_col, dim
     )
-    cells = _assign_cells(
-        _spread(corpus).select(id_col, vec_col), cents, id_col, 1, vec_col, dim
-    )
-    probes = _assign_cells(
-        queries.select(F.col(query_id_col), F.col(vec_col)),
-        cents, query_id_col, nprobe, vec_col, dim,
-        tiny=small_queries, with_vec=False,
-    )
-
-    d_sub = dim // n_sub
-    chunks = _pq_chunks_expr(n_sub, d_sub)
     cents_b = _pq_codebooks(
-        corpus, n_codes, chunks, id_col, vec_col, n=corpus_count
+        corpus, n_codes, n_sub, dim, id_col, vec_col, n=corpus_count
     )
-    # encode the CELL-ASSIGNED corpus so each code row carries its cid —
-    # the carry rides the same (id, s) hash aggregate for free (cid is
-    # functionally dependent on id, so the extra group key adds no rows)
-    corpus_chunks = cells.select(
-        F.col(id_col),
-        "cid",
-        F.posexplode(F.expr(chunks.format(v=vec_col))).alias("s", "_vchunk"),
-    )
-    enc = _pq_encode(corpus_chunks, cents_b, [id_col, "cid"])
-    dt = _pq_query_tables(queries, cents_b, chunks, query_id_col, vec_col)
+    enc = _cell_codes(corpus, cents, cents_b, n_sub, dim, id_col, vec_col)
     # gate the lookup tables by the query's probed cells: |Q|·nprobe·
     # n_sub·n_codes rows — still broadcast-sized — and the ADC join
     # becomes an equi-join on (cid, s, code) that only ever reads code
     # rows living in a probed cell
-    dtp = dt.withColumnRenamed("c", "code").join(probes, query_id_col)
-    adc = (
-        enc.join(F.broadcast(dtp), ["cid", "s", "code"])
-        .filter(F.col(id_col) != F.col(query_id_col))
-        .groupBy(query_id_col, id_col)
-        .agg(F.sum("_qd").alias("_adc"))
-    )
-    wq = Window.partitionBy(query_id_col).orderBy("_adc", id_col)
-    cand = (
-        adc.withColumn("_rk", F.row_number().over(wq))
-        .filter(F.col("_rk") <= m_cand)
-        .select(query_id_col, id_col)
+    dtp = _pq_query_tables(
+        queries, cents_b, n_sub, dim, query_id_col, vec_col
+    ).join(probes, query_id_col)
+    cand = _adc_candidates(
+        enc, dtp, ["cid", "s", "code"], m_cand, id_col, query_id_col
     )
     return _exact_rerank(
         cand, corpus, queries, k, id_col, vec_col, query_id_col, dim

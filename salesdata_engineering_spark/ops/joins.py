@@ -13,33 +13,6 @@ from __future__ import annotations
 from collections.abc import Sequence
 
 from pyspark.sql import Column, DataFrame
-from pyspark.sql import functions as F
-
-
-def equi_join(
-    df: DataFrame,
-    other: DataFrame,
-    on: str | Sequence[str] | Column,
-    how: str = "inner",
-    broadcast_right: bool = False,
-) -> DataFrame:
-    """J1-J3 generalized — equi-join with optional broadcast hint."""
-    right = F.broadcast(other) if broadcast_right else other
-    return df.join(right, on, how)
-
-
-def star_join(
-    fact: DataFrame,
-    dims: Sequence[tuple[DataFrame, Column | str | Sequence[str]]],
-    how: str = "inner",
-) -> DataFrame:
-    """Fact ⋈ broadcast(dim1) ⋈ broadcast(dim2) ⋈ ... — the reference's
-    enrichment pipeline (J1→J2→J3) as one declarative chain. Each dim is
-    broadcast: one scan of the fact, no shuffle, join order irrelevant."""
-    out = fact
-    for dim, on in dims:
-        out = out.join(F.broadcast(dim), on, how)
-    return out
 
 
 def semi_join(df: DataFrame, other: DataFrame, on: str | Sequence[str] | Column) -> DataFrame:

@@ -8,7 +8,7 @@ they push down to the parquet scan (Catalyst `PushDownPredicates`).
 
 from __future__ import annotations
 
-from collections.abc import Mapping, Sequence
+from collections.abc import Mapping
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
@@ -17,16 +17,6 @@ from pyspark.sql import functions as F
 def project(df: DataFrame, *cols: str | Column) -> DataFrame:
     """P1 — column projection (parity: main.py:219-221, 240-245)."""
     return df.select(*cols)
-
-
-def drop_columns(df: DataFrame, *cols: str) -> DataFrame:
-    """P2 — column drop (parity: dimension_tables_join.py:20-21,36,54).
-
-    Note the Spark gotcha the reference trips on: dropping a *qualified*
-    name like ``"st.first_name"`` is a silent no-op — rename before
-    dropping (the reference works around the same way at
-    dimension_tables_join.py:50-53)."""
-    return df.drop(*cols)
 
 
 def derive(df: DataFrame, **named_exprs: Column | str) -> DataFrame:
@@ -45,26 +35,9 @@ def where(df: DataFrame, predicate: Column | str) -> DataFrame:
     return df.filter(predicate)
 
 
-def where_in(df: DataFrame, col: str, values: Sequence) -> DataFrame:
-    """P5 — IN-list predicate (parity: the ledger's
-    ``WHERE file_name IN (...)``, main.py:40-41)."""
-    return df.filter(F.col(col).isin(list(values)))
-
-
 def where_between(df: DataFrame, col: str, lo, hi) -> DataFrame:
     """P5 — range predicate; pushes down as two parquet filters."""
     return df.filter(F.col(col).between(lo, hi))
-
-
-def where_like(df: DataFrame, col: str, pattern: str) -> DataFrame:
-    """P5 — LIKE predicate (``%``/``_`` SQL wildcards)."""
-    return df.filter(F.col(col).like(pattern))
-
-
-def where_null(df: DataFrame, col: str, is_null: bool = True) -> DataFrame:
-    """P5 — null / not-null predicate."""
-    c = F.col(col)
-    return df.filter(c.isNull() if is_null else c.isNotNull())
 
 
 def rename(df: DataFrame, mapping: Mapping[str, str]) -> DataFrame:

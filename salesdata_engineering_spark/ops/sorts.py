@@ -13,11 +13,6 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 
-def order_by(df: DataFrame, *order: Column | str) -> DataFrame:
-    """O1 generalized — global sort."""
-    return df.orderBy(*order)
-
-
 def limit(df: DataFrame, n: int) -> DataFrame:
     return df.limit(n)
 

@@ -10,7 +10,7 @@ from __future__ import annotations
 
 from collections.abc import Sequence
 
-from pyspark.sql import Column, DataFrame, Window, WindowSpec
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 
@@ -28,16 +28,6 @@ def asc_nulls_last(*order: Column | str) -> list[Column]:
     return [
         (F.col(c) if isinstance(c, str) else c).asc_nulls_last() for c in order
     ]
-
-
-def group_window(*keys: str) -> WindowSpec:
-    """W1/W2 — unbounded whole-partition frame (no orderBy)."""
-    return Window.partitionBy(*keys)
-
-
-def windowed_sum(df: DataFrame, keys: Sequence[str], value: str | Column, alias: str) -> DataFrame:
-    """W1/W2 — partitioned unbounded SUM."""
-    return df.withColumn(alias, F.sum(value).over(Window.partitionBy(*keys)))
 
 
 def ranked(

@@ -224,55 +224,17 @@ def test_corrupt_ledger_raises_instead_of_reading_as_empty(spark, tmp_path):
         ledger.pending(["a.csv", "c.csv"])
 
 
-def test_compact_parquet_merges_small_files(spark, tmp_path):
-    from salesdata_engineering_spark.io import compact_parquet
-
-    out = str(tmp_path / "frag")
-    spark.range(0, 10_000).repartition(64).write.parquet(out)
-    before = len(list((tmp_path / "frag").glob("*.parquet")))
-    assert before >= 32  # fragmented
-    n = compact_parquet(spark, out, target_file_mb=128)
-    after = len(list((tmp_path / "frag").glob("*.parquet")))
-    assert n == 1 and after == 1
-    assert spark.read.parquet(out).count() == 10_000  # lossless
-
-
-def test_compact_parquet_crash_never_loses_data(spark, tmp_path, monkeypatch):
-    """Inject a crash in the worst window — after the source moved aside,
-    before the compacted copy lands — and require the rollback to restore
-    the canonical path with every row intact."""
-    from pathlib import Path as _P
-
-    from salesdata_engineering_spark.io import compact_parquet
-
-    out = str(tmp_path / "frag2")
-    spark.range(0, 1000).repartition(8).write.parquet(out)
-
-    orig_rename = _P.rename
-    calls = {"n": 0}
-
-    def rename_crash_on_second(self, target):
-        # call 1: src -> old-aside; call 2: tmp -> canonical (CRASH HERE);
-        # call 3: rollback old-aside -> canonical (must pass through)
-        calls["n"] += 1
-        if calls["n"] == 2:
-            raise OSError("injected crash between the two swap renames")
-        return orig_rename(self, target)
-
-    monkeypatch.setattr(_P, "rename", rename_crash_on_second, raising=True)
-    try:
-        with pytest.raises(OSError, match="injected crash"):
-            compact_parquet(spark, out, target_file_mb=128)
-    finally:
-        monkeypatch.setattr(_P, "rename", orig_rename, raising=True)
-
-    # rollback restored the canonical path — full data, readable
-    assert (tmp_path / "frag2").exists()
-    assert spark.read.parquet(out).count() == 1000
-
-    # and a clean compact still round-trips afterwards
-    n = compact_parquet(spark, out, target_file_mb=128)
-    assert n == 1 and spark.read.parquet(out).count() == 1000
+def test_ledger_record_writes_one_part_per_call(spark, tmp_path):
+    """Each status transition appends exactly one parquet part, however
+    many rows it carries and however many cores the session has — every
+    later pending/snapshot/restart pays one footer read per part."""
+    path = tmp_path / "ledger_parts"
+    ledger = FileLedger(spark, str(path))
+    ledger.record(["a.csv", "b.csv"], STATUS_DONE)
+    ledger.record(["c.csv", "d.csv", "e.csv"], STATUS_DONE)
+    ledger.record(["f.csv"], STATUS_DONE)
+    assert len(list(path.glob("part-*.parquet"))) == 3
+    assert ledger.pending(["a.csv", "e.csv", "f.csv", "g.csv"]) == ["g.csv"]
 
 
 def test_ledger_seq_survives_restart(spark, tmp_path):

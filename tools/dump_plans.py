@@ -5,22 +5,45 @@ Usage: python tools/dump_plans.py --tag r14 --suffix before q1 q2 ...
        python tools/dump_plans.py --tag r14 --suffix before --headline
 
 Writes plans/<tag>/<query>_<suffix>.txt — the optimization-round
-evidence files the judge diffs against the code (they cannot run
-Spark). Plans are captured lazily (no execution) except where a
-query's fn itself materializes an artifact (e.g. the persisted ANN
-index ensure path), which runs as it would in the bench.
+evidence files, readable against the code without running Spark.
+Plans are captured lazily (no execution) except where a query's fn
+itself materializes an artifact (e.g. the persisted ANN index ensure
+path), which runs as it would in the bench.
+
+Session-specific tokens (expression ids, plan ids, lambda variable
+suffixes, RDD ids and call sites, LogicalRDD attribute lists) are
+normalised away before writing, so two dumps of unchanged code in two
+fresh sessions diff clean and a refactor can be checked plan-identical
+with a plain ``diff``.
 """
 
 from __future__ import annotations
 
 import argparse
 import os
+import re
 import sys
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from salesdata_engineering_spark.registry import QUERIES  # noqa: E402
 from salesdata_engineering_spark.session import get_spark  # noqa: E402
+
+#: (pattern, replacement) pairs applied in order to every dumped plan.
+_NORMALISE = [
+    (re.compile(r"#\d+L?"), "#"),
+    (re.compile(r"\[plan_id=\d+\]"), ""),
+    (re.compile(r"(lambda [a-z]+)_\d+"), r"\1"),
+    (re.compile(r"(ExistingRDD|LogicalRDD)\[[^\]]*\]"), r"\1"),
+    (re.compile(r"\w*RDD\[\d+\]"), "RDD"),
+    (re.compile(r"at \w+ at [\w.]+:\d+"), ""),
+]
+
+
+def normalise(plan: str) -> str:
+    for pat, rep in _NORMALISE:
+        plan = pat.sub(rep, plan)
+    return plan
 
 
 def main() -> None:
@@ -67,7 +90,7 @@ def main() -> None:
         except Exception as exc:  # keep going; record the failure
             plan = f"PLAN CAPTURE FAILED: {exc!r}\n"
         with open(path, "w") as fh:
-            fh.write(plan)
+            fh.write(normalise(plan))
         print(f"wrote {path}", flush=True)
     spark.stop()
 
