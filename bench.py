@@ -653,9 +653,12 @@ def _ann_serve_scaling(spark, sf_dir: str, runs: int) -> dict[str, float]:
         ensure_ivf_pq_index,
         search_ivf_pq_index,
     )
-    from salesdata_engineering_spark.registry_ext import _IVF_NPROBE, _ivf_stride
+    from salesdata_engineering_spark.registry_ext import (
+        _ANN_CACHE_ROOT,
+        _IVF_NPROBE,
+        _ivf_stride,
+    )
 
-    repo = os.path.dirname(os.path.abspath(__file__))
     # mirror the _embs_nn intake EXACTLY (NULL vec_id/embedding dropped
     # before the cast): this probe shares the serve query's deferred-
     # sizing cache key, so the two callers MUST pass identical corpora —
@@ -679,7 +682,7 @@ def _ann_serve_scaling(spark, sf_dir: str, runs: int) -> dict[str, float]:
         return {"stride": _ivf_stride(corpus, n), "corpus_count": n}
 
     idx = ensure_ivf_pq_index(
-        spark, corpus, sf_dir, os.path.join(repo, ".data", "ann_index"),
+        spark, corpus, sf_dir, _ANN_CACHE_ROOT,
         deferred_sizing=_sizing, n_codes=64,
     )
     out: dict[str, float] = {}

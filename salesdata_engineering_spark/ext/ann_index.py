@@ -27,10 +27,9 @@ corpus lives — local FS here, an object store on a cluster):
   (dim, n_sub, n_codes, stride, corpus count); serve-time mismatches
   raise instead of silently searching a differently-shaped index.
 
-Publication is crash-safe the same way ``ops/layout.compact_parquet_dir``
-swaps: build into ``<dir>.new``, then one FileSystem rename — readers
-either see the old complete index or the new complete index, never a
-half-written one.
+Publication goes through :func:`..fsops.swap_in`: the index is built
+into ``<dir>.new`` and swapped in whole, so a published directory is
+always a complete index.
 
 Determinism: the build re-uses the exact machinery of the in-query
 composed ANN (strided centroids, cc − 2·dot argmin encode with integer
@@ -45,6 +44,7 @@ verdict asked the round-7 composed ANN to grow into.
 
 from __future__ import annotations
 
+import functools
 import hashlib
 import os
 
@@ -116,9 +116,11 @@ def build_ivf_pq_index(
     (strided centroids → cell assignment → strided codebooks → argmin
     PQ encode), materialized instead of consumed: the coded inverted
     file is written partitioned by ``cid`` so serve-time cell probes
-    become partition pruning.  Returns ``index_dir``.
+    become partition pruning.  The index is written to
+    ``<index_dir>.new`` and published by :func:`..fsops.swap_in`.
+    Returns ``index_dir``.
     """
-    from ..fsops import _fs_and_path
+    from ..fsops import fs_delete, swap_in
 
     n = corpus.count() if corpus_count is None else corpus_count
     # collected local relation (r15, see similarity._local_broadcast):
@@ -130,10 +132,7 @@ def build_ivf_pq_index(
     enc = _cell_codes(corpus, cents, cents_b, n_sub, dim, id_col, vec_col)
 
     new_dir = f"{index_dir}.new"
-    fs, live_p = _fs_and_path(spark, index_dir)
-    new_p = _fs_and_path(spark, new_dir)[1]
-    if fs.exists(new_p):  # leftover from a crashed build — never partial-live
-        fs.delete(new_p, True)
+    fs_delete(spark, new_dir, recursive=True)  # leftover of a crashed build
     # written from the collected local relation — no corpus re-scan
     cents.select("cid", "_cvec").write.mode("overwrite").parquet(
         f"{new_dir}/centroids"
@@ -149,10 +148,7 @@ def build_ivf_pq_index(
         f"{new_dir}/codebooks"
     )
 
-    if fs.exists(live_p):
-        fs.delete(live_p, True)
-    if not fs.rename(new_p, live_p):
-        raise IOError(f"publish failed: rename {new_dir} -> {index_dir}")
+    swap_in(spark, index_dir)
     return index_dir
 
 
@@ -405,11 +401,10 @@ def compact_index_postings(
     together (``basePath`` recovers cid), repartitioned by cid and
     written partitioned-by-cid to a ``_``-prefixed scratch dir — ONE
     Spark job per batch, exactly one output file per cell — and then
-    each cell is swapped in with the same per-cell crash-safe
-    .new/.old rename discipline ``ops/layout.compact_parquet_dir``
-    uses. Oversized leaves (> target_file_bytes, needing a computed
-    multi-file output) still go through compact_parquet_dir
-    individually. ``batch_cells`` stays at Spark's default
+    each cell is staged at ``cid=N.new`` and published by
+    :func:`..fsops.swap_in`. Oversized leaves (> target_file_bytes,
+    needing a computed multi-file output) still go through
+    compact_parquet_dir individually. ``batch_cells`` stays at Spark's default
     parallelPartitionDiscovery threshold so the batched read never
     spawns its own listing job.
 
@@ -418,9 +413,9 @@ def compact_index_postings(
     ``_``-prefixed paths; the next call deletes it). A kill after a
     cell's scratch output was renamed to ``cid=N.new`` but before its
     swap is healed by the debris pass below (stale .new next to a live
-    leaf is deleted and the leaf recompacted). A kill between the two
-    swap renames is compact_parquet_dir's documented self-heal. Readers
-    either see the old complete posting list or the new complete one.
+    leaf is deleted and the leaf recompacted). A kill inside a swap is
+    finished or rolled back by :func:`..fsops.recover_swap`, which the
+    debris pass runs through compact_parquet_dir.
 
     Serving results are bit-identical before/after — compaction only
     re-bins the same (id, s, code) rows into fewer files
@@ -443,9 +438,9 @@ def compact_index_postings(
     # Left alone they would be mis-read as live partitions — Spark's
     # partition discovery parses 'N.old' and widens cid to string,
     # silently breaking the serve-time cid IN (...) prune. Invoking
-    # compact_parquet_dir on the LIVE path runs its documented
-    # self-heal (restores a missing live dir from .new/.old, deletes
-    # stale scratch) before any new work.
+    # compact_parquet_dir on the LIVE path recovers the swap
+    # (fsops.recover_swap) and recompacts the leaf, whose own swap
+    # replaces the stale siblings, before any new work.
     debris_live = {
         st.getPath().getName().rsplit(".", 1)[0]
         for st in fs.listStatus(codes_p)
@@ -527,12 +522,12 @@ def _compact_leaf_group(
     spark, fs, codes_p, scratch, scratch_p, group, schema, target_file_bytes
 ):
     """One batched rewrite: read ``group`` leaves together, write one
-    file per cell to scratch in ONE Spark job, then swap each cell in
-    with the per-cell crash-safe rename discipline. Returns (number of
-    parquet files now in the group's leaves, the codes schema) so the
-    caller can pass the schema to later batches (skipping per-read
-    inference jobs)."""
-    from ..fsops import _fs_and_path
+    file per cell to scratch in ONE Spark job, then stage each cell at
+    ``cid=N.new`` and publish it with :func:`..fsops.swap_in`. Returns
+    (number of parquet files now in the group's leaves, the codes
+    schema) so the caller can pass the schema to later batches
+    (skipping per-read inference jobs)."""
+    from ..fsops import _fs_and_path, _rename, swap_in
     from ..ops.layout import compact_parquet_dir
 
     fs.delete(scratch_p, True)
@@ -553,20 +548,10 @@ def _compact_leaf_group(
             # back to the per-leaf rewrite (emits one empty file)
             compact_parquet_dir(spark, leaf.toString(), target_file_bytes)
         else:
-            # the compact_parquet_dir swap discipline, per cell:
-            # .new is complete before the live dir moves, and every
-            # intermediate state is healed at the next call's entry
             new_p = _fs_and_path(spark, f"{leaf}.new")[1]
-            old_p = _fs_and_path(spark, f"{leaf}.old")[1]
             fs.delete(new_p, True)
-            if not fs.rename(src, new_p):
-                raise IOError(f"compaction failed staging {leaf}.new")
-            fs.delete(old_p, True)
-            if not fs.rename(leaf, old_p):
-                raise IOError(f"compaction swap failed renaming {leaf}")
-            if not fs.rename(new_p, leaf):
-                raise IOError(f"compaction swap failed installing {leaf}")
-            fs.delete(old_p, True)
+            _rename(fs, src, new_p)
+            swap_in(spark, leaf.toString())
         n_after += len(_parquet_files(fs, leaf))
     fs.delete(scratch_p, True)
     return n_after, df.schema
@@ -610,11 +595,11 @@ def ensure_ivf_pq_index(
     **build_kwargs,
 ) -> str:
     """Build-or-reuse: the persisted index for ``sf_dir``'s embeddings,
-    keyed by corpus fingerprint + build parameters.  First call builds
-    (one-time cost); every later call — across sessions — returns the
-    published directory immediately.  The crash-safe ``.new`` swap in
-    :func:`build_ivf_pq_index` makes a concurrent double-build benign:
-    both publish identical bits, last rename wins atomically.
+    keyed by corpus fingerprint + build parameters + the build code's
+    version (:func:`_cached_index`).  First call builds (one-time cost);
+    every later call — across sessions — returns the published
+    directory immediately.  A build cut by a crash is never served: see
+    :func:`..fsops.recover_swap`.
 
     ``deferred_sizing`` (r14, guide §5 "the driver should do almost no
     data work"): a thunk returning extra build kwargs that require
@@ -640,11 +625,36 @@ def ensure_ivf_pq_index(
     key_src = corpus_fingerprint(sf_dir) + repr(sorted(build_kwargs.items()))
     if deferred_sizing is not None:
         key_src += ":derived-sizing"
-    key = hashlib.md5(key_src.encode()).hexdigest()[:16]
-    index_dir = os.path.join(cache_root, f"ivf_pq_{key}")
-    if os.path.isdir(index_dir) and os.path.isdir(f"{index_dir}/codes"):
+    index_dir, hit = _cached_index(spark, cache_root, "ivf_pq", key_src)
+    if hit:
         return index_dir
     if deferred_sizing is not None:
         build_kwargs.update(deferred_sizing())
-    os.makedirs(cache_root, exist_ok=True)
     return build_ivf_pq_index(spark, corpus, index_dir, **build_kwargs)
+
+
+@functools.cache
+def _code_version() -> str:
+    """md5 of this module's and ``similarity.py``'s source bytes — the
+    build, encode and compaction stages — read once per process."""
+    here = os.path.dirname(os.path.abspath(__file__))
+    h = hashlib.md5()
+    for name in ("similarity.py", "ann_index.py"):
+        with open(os.path.join(here, name), "rb") as fh:
+            h.update(fh.read())
+    return h.hexdigest()
+
+
+def _cached_index(
+    spark: SparkSession, cache_root: str, prefix: str, key_src: str
+) -> tuple[str, bool]:
+    """(directory, hit) of the cached index keyed by ``key_src`` and the
+    code version, so an edit to the build code keys a fresh directory.
+    An interrupted swap is recovered first; a hit means a published
+    ``codes`` dir, read through the Hadoop FS like every other path."""
+    from ..fsops import fs_exists, recover_swap
+
+    key = hashlib.md5((key_src + _code_version()).encode()).hexdigest()[:16]
+    index_dir = f"{cache_root}/{prefix}_{key}"
+    recover_swap(spark, index_dir)
+    return index_dir, fs_exists(spark, f"{index_dir}/codes")

@@ -72,6 +72,12 @@ def fs_delete(spark: SparkSession, uri: str, recursive: bool = False) -> bool:
     return bool(fs.delete(path, recursive))
 
 
+def _rename(fs, src, dst) -> None:
+    """Hadoop ``rename`` reports failure by returning false; raise it."""
+    if not fs.rename(src, dst):
+        raise IOError(f"rename failed: {src} -> {dst}")
+
+
 def fs_move(spark: SparkSession, src_uri: str, dst_dir_uri: str) -> str:
     """Move one file into ``dst_dir_uri`` (created if missing), keeping
     its basename; returns the destination URI. Parity with the
@@ -88,21 +94,56 @@ def fs_move(spark: SparkSession, src_uri: str, dst_dir_uri: str) -> str:
     dst_fs = dst_dir.getFileSystem(conf)
     dst_fs.mkdirs(dst_dir)
     dst = jvm.org.apache.hadoop.fs.Path(dst_dir, src.getName())
-    same_fs = fs.getUri().toString() == dst_fs.getUri().toString()
-    if same_fs:
-        if not fs.rename(src, dst):
-            raise IOError(f"rename failed: {src_uri} -> {dst}")
-    else:
-        if not jvm.org.apache.hadoop.fs.FileUtil.copy(fs, src, dst_fs, dst, True, conf):
-            raise IOError(f"cross-fs move failed: {src_uri} -> {dst}")
+    if fs.getUri().toString() == dst_fs.getUri().toString():
+        _rename(fs, src, dst)
+    elif not jvm.org.apache.hadoop.fs.FileUtil.copy(fs, src, dst_fs, dst, True, conf):
+        raise IOError(f"cross-fs move failed: {src_uri} -> {dst}")
     return dst.toString()
 
 
-def route_rejected_fs(
-    spark: SparkSession, rejected: dict[str, list[str]], error_dir_uri: str
-) -> list[str]:
-    """URI-generic twin of :func:`..ingest.route_rejected` (which is
-    local-path/shutil): move every rejected file to the error directory
-    over whatever FileSystem its scheme resolves to. Same observable
-    lifecycle as main.py:127-140."""
-    return [fs_move(spark, p, error_dir_uri) for p in rejected]
+# Directory publishing. Two renames cannot be atomic together, so a
+# directory ``live`` is replaced crash-recoverably through two sibling
+# names: the writer fills ``{live}.new`` completely, then swap_in moves
+# ``live`` to ``{live}.old``, ``{live}.new`` to ``live`` and deletes
+# ``{live}.old``. ``live`` is missing only between the two renames, and
+# there ``{live}.old`` always exists — the one state recover_swap acts on.
+
+
+def _swap_paths(spark: SparkSession, live: str):
+    """(FileSystem, live, .new, .old) Paths; the siblings hang off the
+    normalized live path, so a trailing slash cannot nest them inside."""
+    fs, live_p = _fs_and_path(spark, live)
+    live = live_p.toString()
+    new_p = _fs_and_path(spark, f"{live}.new")[1]
+    return fs, live_p, new_p, _fs_and_path(spark, f"{live}.old")[1]
+
+
+def recover_swap(spark: SparkSession, live: str) -> None:
+    """Finish or roll back a swap_in that a crash cut between its
+    renames: with ``live`` missing and ``{live}.old`` present, install
+    ``{live}.new`` (complete before ``live`` ever moved) or, without
+    one, restore ``{live}.old``. Every other state is left as it is —
+    in particular a ``{live}.new`` with no ``{live}.old`` may be a
+    partly written first publish and is never installed."""
+    fs, live_p, new_p, old_p = _swap_paths(spark, live)
+    if fs.exists(live_p) or not fs.exists(old_p):
+        return
+    if fs.exists(new_p):
+        _rename(fs, new_p, live_p)
+        fs.delete(old_p, True)
+    else:
+        _rename(fs, old_p, live_p)
+
+
+def swap_in(spark: SparkSession, live: str) -> None:
+    """Install the fully written directory ``{live}.new`` at ``live``
+    (created or replaced) through ``{live}.old``; raises ``IOError``
+    when a rename reports failure. A crash inside is finished or rolled back by
+    :func:`recover_swap`. Readers of ``live`` can miss it between the
+    two renames; serialize them against publishers if that matters."""
+    fs, live_p, new_p, old_p = _swap_paths(spark, live)
+    fs.delete(old_p, True)
+    if fs.exists(live_p):
+        _rename(fs, live_p, old_p)
+    _rename(fs, new_p, live_p)
+    fs.delete(old_p, True)

@@ -18,8 +18,8 @@ Engine re-expression, Spark-first:
 - Union is ``unionByName(allowMissingColumns=True)`` over per-header
   frames; the "additional column" fold is kept as an explicit compat
   op (exact name with the space, main.py:195-197).
-- File moves go through the local/Hadoop filesystem module and work on
-  any FS the JVM can mount.
+- File moves go through the Hadoop filesystem module (``fsops``) and
+  work on any FS the JVM can mount.
 
 Scale: validation reads only each CSV's first line, through the Hadoop
 FileSystem on the driver (no Spark job). The data scan is one
@@ -35,7 +35,6 @@ by the ledger's history.
 from __future__ import annotations
 
 import csv
-import shutil
 from dataclasses import dataclass, field
 from pathlib import Path
 
@@ -43,7 +42,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from .fsops import _fs_and_path, fs_exists
+from .fsops import _fs_and_path, fs_exists, fs_move
 from .functions import fold_extra_columns
 from .schemas import LEDGER_SCHEMA, RAW_SALES_SCHEMA
 
@@ -124,17 +123,14 @@ def validate_files(
     return res
 
 
-def route_rejected(rejected: dict[str, list[str]], error_dir: str) -> list[str]:
-    """Move rejected files to the error directory
-    (parity: main.py:127-140 + move_files.py:26-62). Local/NFS paths via
-    shutil; object stores route through their own rename API."""
-    Path(error_dir).mkdir(parents=True, exist_ok=True)
-    moved = []
-    for p in rejected:
-        dest = str(Path(error_dir) / Path(p).name)
-        shutil.move(p, dest)
-        moved.append(dest)
-    return moved
+def route_rejected(
+    spark: SparkSession, rejected: dict[str, list[str]], error_dir: str
+) -> list[str]:
+    """Move rejected files to the error directory, created if missing
+    (parity: main.py:127-140 + move_files.py:26-62), through
+    :func:`.fsops.fs_move` on whatever FileSystem the paths resolve to;
+    returns the destination paths."""
+    return [fs_move(spark, p, error_dir) for p in rejected]
 
 
 def _read_group(
@@ -351,7 +347,7 @@ def ingest_batch(
     files = sorted(str(p) for p in Path(landing_dir).glob("*.csv"))
     files = ledger.pending(files)
     result = validate_files(spark, files, mandatory)
-    moved = route_rejected(result.rejected, error_dir)
+    moved = route_rejected(spark, result.rejected, error_dir)
     if not result.ok:
         return None, IngestReport([], moved, 0)
     ledger.record(result.ok, STATUS_ACTIVE)

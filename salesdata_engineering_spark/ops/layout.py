@@ -129,18 +129,10 @@ def compact_parquet_dir(
     Small files are the silent killer of 100 TB scans (per-file open
     cost, starved vectorized readers, NameNode/listing pressure); every
     streaming sink and per-batch writer produces them. The rewrite is
-    one read -> repartition(ceil(bytes/target)) -> write to a scratch
-    dir, then a crash-safe swap (the same .new/.old discipline as the
-    streaming upsert sink: scratch is fully written before the old dir
-    moves, and a kill between renames leaves the data in ``.old``
-    rather than half-replaced). The swap has a window between the two
-    renames where the LIVE path does not exist — concurrent readers can
-    hit a transient missing-path failure there (serialize readers
-    against compaction externally if that matters) — and a crash in
-    that window is self-healed at the NEXT call's entry: a missing live
-    dir with a leftover ``.new`` (always fully written before the old
-    dir moves) is finished forward; a missing live dir with only
-    ``.old`` is rolled back. Byte size comes from the FileSystem
+    one read -> repartition(ceil(bytes/target)) -> write to
+    ``{path}.new``, published by :func:`..fsops.swap_in`; a crash inside
+    a previous call's swap is finished or rolled back at entry by
+    :func:`..fsops.recover_swap`. Byte size comes from the FileSystem
     listing, so the helper works on any Hadoop FS URI.
 
     FLAT directories only: a hive-partitioned dir (key= subdirs) is
@@ -151,25 +143,11 @@ def compact_parquet_dir(
     helper)."""
     import math
 
-    from ..fsops import _fs_and_path
+    from ..fsops import _fs_and_path, recover_swap, swap_in
 
+    recover_swap(spark, path)
     fs, p = _fs_and_path(spark, path)
-    path = p.toString()  # normalize (trailing slash would nest scratch
-    # dirs INSIDE the data dir and fail the swap mid-flight)
-    new_p = _fs_and_path(spark, f"{path}.new")[1]
-    old_p = _fs_and_path(spark, f"{path}.old")[1]
-    if not fs.exists(p):
-        # self-heal a crash inside a previous call's swap window (see
-        # docstring): .new is complete by construction, so finishing
-        # the interrupted swap is always safe; with no .new left, fall
-        # back to restoring the pre-compaction data from .old
-        if fs.exists(new_p):
-            if not fs.rename(new_p, p):
-                raise IOError(f"compaction self-heal failed installing {new_p}")
-            fs.delete(old_p, True)
-        elif fs.exists(old_p):
-            if not fs.rename(old_p, p):
-                raise IOError(f"compaction self-heal failed restoring {old_p}")
+    path = p.toString()  # normalize (a trailing slash would nest .new inside)
     statuses = list(fs.listStatus(p))
     subdirs = [
         s.getPath().getName() for s in statuses if not s.isFile()
@@ -183,12 +161,6 @@ def compact_parquet_dir(
     total = sum(s.getLen() for s in statuses if s.isFile())
     n_files = max(1, math.ceil(total / target_file_bytes))
     df = spark.read.parquet(path)
-    fs.delete(new_p, True)
     df.repartition(n_files).write.mode("overwrite").parquet(f"{path}.new")
-    fs.delete(old_p, True)
-    if not fs.rename(p, old_p):
-        raise IOError(f"compaction swap failed renaming {path}")
-    if not fs.rename(new_p, p):
-        raise IOError(f"compaction swap failed installing {path}.new")
-    fs.delete(old_p, True)
+    swap_in(spark, path)
     return n_files

@@ -17,6 +17,8 @@ DuckDB↔Spark equivalences used throughout (probed, exact):
 
 from __future__ import annotations
 
+import os
+
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
@@ -703,6 +705,11 @@ def q_multimodal_featurize(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 _IVF_NPROBE = 4
+
+#: Cache of the persisted-index queries' indexes (<repo>/.data/ann_index).
+_ANN_CACHE_ROOT = os.path.join(
+    os.path.dirname(os.path.dirname(os.path.abspath(__file__))), ".data", "ann_index"
+)
 
 #: Centroid sampling stride, scaled so n_cells ~ sqrt(N) UP TO a fixed
 #: cap. A FIXED stride (r5 used 50) makes n_cells = N/50 grow linearly
@@ -2523,16 +2530,10 @@ def q_sim_ivf_pq_rekeyed_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     bench=True,  # the serve-vs-build A/B against sim_ivf_pq_topk
 )
 def q_sim_ivf_pq_index_serve(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import os
-
     from .ext.ann_index import ensure_ivf_pq_index, search_ivf_pq_index
 
     emb = _embs_nn(spark, sf_dir)
     corpus = emb.withColumn("embedding", F.col("embedding").cast("array<double>"))
-    cache_root = os.path.join(
-        os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
-        ".data", "ann_index",
-    )
 
     # r14: the corpus count (and the stride derived from it) moved
     # behind ensure's deferred_sizing thunk — the fingerprint already
@@ -2545,7 +2546,7 @@ def q_sim_ivf_pq_index_serve(spark: SparkSession, sf_dir: str) -> DataFrame:
         return {"stride": _ivf_stride(corpus, n), "corpus_count": n}
 
     idx = ensure_ivf_pq_index(
-        spark, corpus, sf_dir, cache_root, deferred_sizing=_sizing, n_codes=64,
+        spark, corpus, sf_dir, _ANN_CACHE_ROOT, deferred_sizing=_sizing, n_codes=64,
     )
     return search_ivf_pq_index(
         spark, idx, corpus, _queries_subset(corpus),
@@ -2569,25 +2570,23 @@ def q_sim_ivf_pq_index_serve(spark: SparkSession, sf_dir: str) -> DataFrame:
     "centroid/codebook sample ids — exactly the ids whose absence "
     "cannot perturb the frozen geometry, mirroring how production "
     "appends arrive AFTER the trained geometry is pinned. Staged "
-    "publication: base build + append happen under <dir>.stage and "
-    "one rename publishes, so a crash mid-sequence can never leave a "
-    "cached index missing its batch. Since r9 the staged sequence also "
+    "publication: base build + append happen under <dir>.new and "
+    "fsops.swap_in publishes, so a crash mid-sequence can never leave "
+    "a cached index missing its batch. Since r9 the staged sequence also "
     "runs compact_index_postings (small-files compaction of the "
     "appended cells through the crash-safe layout swap), so the SAME "
     "oracle additionally proves compaction is serving-invariant.",
 )
 def q_sim_ivf_pq_index_append(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import hashlib
-    import os
-
     from .ext.ann_index import (
+        _cached_index,
         append_ivf_pq_index,
         build_ivf_pq_index,
         compact_index_postings,
         corpus_fingerprint,
         search_ivf_pq_index,
     )
-    from .fsops import _fs_and_path
+    from .fsops import swap_in
 
     emb = _embs_nn(spark, sf_dir)
     corpus = emb.withColumn("embedding", F.col("embedding").cast("array<double>"))
@@ -2603,17 +2602,12 @@ def q_sim_ivf_pq_index_append(spark: SparkSession, sf_dir: str) -> DataFrame:
         & (F.col("vec_id") % stride != 0)
         & ~((F.col("vec_id") % step == 0) & (F.col("vec_id") < 64 * step))
     )
-    cache_root = os.path.join(
-        os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
-        ".data", "ann_index",
+    idx, hit = _cached_index(
+        spark, _ANN_CACHE_ROOT, "ivf_pq_app",
+        corpus_fingerprint(sf_dir) + f"append:{stride}:{step}:{n}",
     )
-    key_src = corpus_fingerprint(sf_dir) + f"append:{stride}:{step}:{n}"
-    idx = os.path.join(
-        cache_root, f"ivf_pq_app_{hashlib.md5(key_src.encode()).hexdigest()[:16]}"
-    )
-    if not (os.path.isdir(idx) and os.path.isdir(f"{idx}/codes")):
-        os.makedirs(cache_root, exist_ok=True)
-        stage = f"{idx}.stage"
+    if not hit:
+        stage = f"{idx}.new"
         build_ivf_pq_index(
             spark, corpus.filter(~is_batch), stage,
             stride=stride, n_codes=64, corpus_count=n,
@@ -2624,12 +2618,7 @@ def q_sim_ivf_pq_index_append(spark: SparkSession, sf_dir: str) -> DataFrame:
         # serving-invariant — re-binning (id, s, code) rows into fewer
         # files per cid partition while partition pruning is preserved
         compact_index_postings(spark, stage)
-        fs, live_p = _fs_and_path(spark, idx)
-        stage_p = _fs_and_path(spark, stage)[1]
-        if fs.exists(live_p):
-            fs.delete(live_p, True)
-        if not fs.rename(stage_p, live_p):
-            raise IOError(f"publish failed: rename {stage} -> {idx}")
+        swap_in(spark, idx)
     return search_ivf_pq_index(
         spark, idx, corpus, _queries_subset(corpus),
         k=5, m_cand=40, nprobe=_IVF_NPROBE,

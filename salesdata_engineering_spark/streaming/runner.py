@@ -235,41 +235,30 @@ def run_foreach_batch_upsert(
     exactly-once per epoch via the checkpoint).
 
     Merge = read current snapshot, union the batch, one max_by hash
-    aggregate per key, write to a ``.new`` scratch dir, then swap —
-    the same snapshot kernel as the batch CDC operator applied
-    incrementally (the merge plan READS the dir it replaces, so an
-    in-place lazy overwrite would truncate its own input, and the
-    swap never pulls the snapshot through the driver). Two directory
-    renames cannot be atomic together on POSIX, so the swap is made
-    CRASH-RECOVERABLE instead of pretending to be atomic: the scratch
-    dirs use fixed names (``{out_dir}.new`` / ``{out_dir}.old``) and
-    the reader side falls back to ``.old`` when ``out_dir`` is missing
-    — a kill between the two renames strands the previous snapshot in
-    ``.old``, and the replayed micro-batch (durable checkpoint) finds
-    it there and merges on top instead of silently restarting from one
-    batch. Idempotent per batch: replaying a micro-batch recomputes
-    the same snapshot (max_by is insensitive to duplicates). At real
-    scale the swap becomes a MERGE INTO against a table format
-    (Delta/Iceberg); the per-batch plan is identical."""
-    import os
-    import shutil
-    import tempfile
-
+    aggregate per key, write to ``{out_dir}.new``, then
+    :func:`..fsops.swap_in` — the same snapshot kernel as the batch CDC
+    operator applied incrementally (the merge plan READS the dir it
+    replaces, so an in-place lazy overwrite would truncate its own
+    input, and the swap never pulls the snapshot through the driver).
+    Each merge starts with :func:`..fsops.recover_swap`, so a batch
+    replayed from the durable checkpoint after a kill inside the swap
+    merges onto the recovered snapshot instead of silently restarting
+    from one batch. Idempotent per batch: replaying a micro-batch
+    recomputes the same snapshot (max_by is insensitive to
+    duplicates). At real scale the swap becomes a MERGE INTO against a
+    table format (Delta/Iceberg); the per-batch plan is identical."""
     from pyspark.sql import functions as F
+
+    from ..fsops import fs_exists, recover_swap, swap_in
 
     spark = stream_df.sparkSession
     schema = stream_df.schema
     payload = [c for c in stream_df.columns if c != key_col]
-    new, old = f"{out_dir}.new", f"{out_dir}.old"
 
     def merge(batch_df: DataFrame, _epoch: int) -> None:
-        current_dir = (
-            out_dir
-            if os.path.isdir(out_dir)
-            else (old if os.path.isdir(old) else None)  # crash between renames
-        )
-        if current_dir is not None:
-            current = spark.read.schema(schema).parquet(current_dir)
+        recover_swap(spark, out_dir)
+        if fs_exists(spark, out_dir):
+            current = spark.read.schema(schema).parquet(out_dir)
             merged_src = current.unionByName(batch_df)
         else:  # first batch: no snapshot yet
             merged_src = batch_df
@@ -279,14 +268,8 @@ def run_foreach_batch_upsert(
             ).alias("_s")
         )
         out = snap.select(key_col, *[F.col(f"_s.{c}").alias(c) for c in payload])
-        shutil.rmtree(new, ignore_errors=True)  # leftover from a failed write
-        out.write.mode("overwrite").parquet(new)
-        # the write above has fully consumed current_dir; swap
-        shutil.rmtree(old, ignore_errors=True)
-        if os.path.isdir(out_dir):
-            os.rename(out_dir, old)
-        os.rename(new, out_dir)
-        shutil.rmtree(old, ignore_errors=True)
+        out.write.mode("overwrite").parquet(f"{out_dir}.new")
+        swap_in(spark, out_dir)  # the write above has fully consumed out_dir
 
     foreach_batch_pipeline(
         stream_df, merge, checkpoint or tempfile.mkdtemp(prefix="ckpt_upsert_")

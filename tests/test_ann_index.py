@@ -71,6 +71,36 @@ def test_ensure_reuses_published_index(spark, sf_dir, corpus, tmp_path):
     assert idx3 != idx1
 
 
+def test_ensure_rekeys_on_build_code_change(
+    spark, sf_dir, corpus, tmp_path, monkeypatch
+):
+    """The cache key carries the build code's version: a changed digest
+    keys a fresh directory and builds it. A hit first recovers an
+    interrupted swap (here: a crash left the published index at .old)."""
+    from salesdata_engineering_spark.ext import ann_index
+
+    n = corpus.count()
+    kw = dict(stride=_ivf_stride(corpus, n), n_codes=64, corpus_count=n)
+    root = str(tmp_path / "cache")
+    idx1 = ensure_ivf_pq_index(spark, corpus, sf_dir, root, **kw)
+    os.rename(idx1, f"{idx1}.old")
+    built = []
+    real_build = ann_index.build_ivf_pq_index
+
+    def counting_build(*a, **k):
+        built.append(a[2])
+        return real_build(*a, **k)
+
+    monkeypatch.setattr(ann_index, "build_ivf_pq_index", counting_build)
+    assert ensure_ivf_pq_index(spark, corpus, sf_dir, root, **kw) == idx1
+    assert built == [] and not os.path.exists(f"{idx1}.old")
+
+    monkeypatch.setattr(ann_index, "_code_version", lambda: "edited build code")
+    idx2 = ensure_ivf_pq_index(spark, corpus, sf_dir, root, **kw)
+    assert idx2 != idx1 and built == [idx2]
+    assert os.path.isdir(os.path.join(idx2, "codes"))
+
+
 def test_ensure_deferred_sizing_skips_corpus_scan_on_hit(
     spark, sf_dir, corpus, tmp_path
 ):
@@ -228,6 +258,30 @@ def test_build_republishes_over_leftover_new_dir(spark, sf_dir, corpus, tmp_path
     )
     assert os.path.isdir(os.path.join(idx, "codes"))
     assert not os.path.exists(f"{target}.new")
+
+
+def test_build_replaces_live_index(spark, sf_dir, corpus, tmp_path):
+    """A rebuild over a published index swaps the new one in whole:
+    no .new or .old is left, and serving matches the oracle of the new
+    build parameters, not the replaced index."""
+    from salesdata_engineering_spark.ext.ann_index import _read_meta
+
+    n = corpus.count()
+    stride = _ivf_stride(corpus, n)
+    target = str(tmp_path / "idx")
+    build_ivf_pq_index(spark, corpus, target, stride=stride, n_codes=16, corpus_count=n)
+    idx = build_ivf_pq_index(
+        spark, corpus, target, stride=stride, n_codes=64, corpus_count=n
+    )
+    assert not os.path.exists(f"{target}.new") and not os.path.exists(f"{target}.old")
+    assert _read_meta(spark, idx).n_codes == 64
+    q = _queries_subset(corpus)
+    ref = ivf_pq_topk(
+        corpus, q, k=5, m_cand=40, n_codes=64,
+        stride=stride, nprobe=4, corpus_count=n,
+    )
+    got = search_ivf_pq_index(spark, idx, corpus, q, k=5, m_cand=40, nprobe=4)
+    assert _sorted_rows(got) == _sorted_rows(ref)
 
 
 def test_index_counts_tracks_appends(spark, sf_dir, corpus, tmp_path):

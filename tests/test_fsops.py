@@ -21,8 +21,10 @@ from salesdata_engineering_spark.fsops import (
     fs_list,
     fs_mkdirs,
     fs_move,
-    route_rejected_fs,
+    recover_swap,
+    swap_in,
 )
+from salesdata_engineering_spark.ingest import route_rejected
 
 REMOTE = os.environ.get("SPARK_GRAFT_REMOTE_FS_DIR")
 
@@ -84,7 +86,7 @@ def test_fs_lifecycle_list_move_delete(spark, fs_root):
     listed = fs_list(spark, landing, suffix=".csv")
     assert [u.rsplit("/", 1)[1] for u in listed] == ["sales_1.csv", "sales_2.csv"]
 
-    moved = route_rejected_fs(spark, {listed[1]: ["customer_id"]}, errors)
+    moved = route_rejected(spark, {listed[1]: ["customer_id"]}, errors)
     assert [u.rsplit("/", 1)[1] for u in moved] == ["sales_2.csv"]
     assert fs_exists(spark, moved[0])
     assert not fs_exists(spark, listed[1])
@@ -95,6 +97,51 @@ def test_fs_lifecycle_list_move_delete(spark, fs_root):
 
     assert fs_delete(spark, done_uri)
     assert not fs_exists(spark, done_uri)
+
+
+def _tree(spark, live: str) -> dict[str, list[str]]:
+    """The file names under live and its two swap siblings (absent
+    directories omitted)."""
+    return {
+        suffix: [u.rsplit("/", 1)[1] for u in fs_list(spark, f"{live}{suffix}")]
+        for suffix in ("", ".new", ".old")
+        if fs_exists(spark, f"{live}{suffix}")
+    }
+
+
+@pytest.mark.parametrize(
+    "state, want",
+    [
+        # live present: nothing to recover, stale siblings left alone
+        ({"": ["v1"], ".new": ["v2"], ".old": ["v0"]},
+         {"": ["v1"], ".new": ["v2"], ".old": ["v0"]}),
+        # crash between swap_in's renames: finish forward
+        ({".new": ["v2"], ".old": ["v1"]}, {"": ["v2"]}),
+        # .old only: roll back
+        ({".old": ["v1"]}, {"": ["v1"]}),
+        # no .old: a .new may be a partial first publish, never installed
+        ({".new": ["part"]}, {".new": ["part"]}),
+    ],
+    ids=["live", "forward", "rollback", "partial-first-publish"],
+)
+def test_recover_swap_states(spark, fs_root, state, want):
+    live = f"{fs_root}/t"
+    for suffix, names in state.items():
+        for name in names:
+            _put(spark, f"{live}{suffix}/{name}", name)
+    recover_swap(spark, live)
+    assert _tree(spark, live) == want
+
+
+def test_swap_in_publishes_and_replaces(spark, fs_root):
+    live = f"{fs_root}/t"
+    _put(spark, f"{live}.new/v1", "v1")
+    swap_in(spark, live)  # first publish
+    assert _tree(spark, live) == {"": ["v1"]}
+    _put(spark, f"{live}.old/stale", "stale")  # debris of an earlier swap
+    _put(spark, f"{live}.new/v2", "v2")
+    swap_in(spark, f"{live}/")  # a trailing slash names the same dir
+    assert _tree(spark, live) == {"": ["v2"]}
 
 
 def test_fs_roundtrip_is_spark_readable(spark, fs_root):

@@ -14,7 +14,9 @@ Session-specific tokens (expression ids, plan ids, lambda variable
 suffixes, RDD ids and call sites, LogicalRDD attribute lists) are
 normalised away before writing, so two dumps of unchanged code in two
 fresh sessions diff clean and a refactor can be checked plan-identical
-with a plain ``diff``.
+with a plain ``diff``. So is the persisted index's cache key, which
+hashes the build code's source and so differs between any two
+versions of it.
 """
 
 from __future__ import annotations
@@ -37,6 +39,7 @@ _NORMALISE = [
     (re.compile(r"(ExistingRDD|LogicalRDD)\[[^\]]*\]"), r"\1"),
     (re.compile(r"\w*RDD\[\d+\]"), "RDD"),
     (re.compile(r"at \w+ at [\w.]+:\d+"), ""),
+    (re.compile(r"(ivf_pq_(?:app_)?)[0-9a-f]{16}"), r"\1<key>"),
 ]
 
 
