@@ -28,7 +28,7 @@ corpus lives — local FS here, an object store on a cluster):
   raise instead of silently searching a differently-shaped index.
 
 Publication goes through :func:`..fsops.swap_in`: the index is built
-into ``<dir>.new`` and swapped in whole, so a published directory is
+into ``fsops.staged(<dir>)`` and swapped in whole, so a published directory is
 always a complete index.
 
 Determinism: the build re-uses the exact machinery of the in-query
@@ -117,10 +117,10 @@ def build_ivf_pq_index(
     PQ encode), materialized instead of consumed: the coded inverted
     file is written partitioned by ``cid`` so serve-time cell probes
     become partition pruning.  The index is written to
-    ``<index_dir>.new`` and published by :func:`..fsops.swap_in`.
+    ``fsops.staged(index_dir)`` and published by :func:`..fsops.swap_in`.
     Returns ``index_dir``.
     """
-    from ..fsops import fs_delete, swap_in
+    from ..fsops import fs_delete, staged, swap_in
 
     n = corpus.count() if corpus_count is None else corpus_count
     # collected local relation (r15, see similarity._local_broadcast):
@@ -131,7 +131,7 @@ def build_ivf_pq_index(
     cents_b = _pq_codebooks(corpus, n_codes, n_sub, dim, id_col, vec_col, n=n)
     enc = _cell_codes(corpus, cents, cents_b, n_sub, dim, id_col, vec_col)
 
-    new_dir = f"{index_dir}.new"
+    new_dir = staged(index_dir)
     fs_delete(spark, new_dir, recursive=True)  # leftover of a crashed build
     # written from the collected local relation — no corpus re-scan
     cents.select("cid", "_cvec").write.mode("overwrite").parquet(
@@ -169,48 +169,40 @@ def _read_probed_codes(
     nlist) and inferred the schema from footers, only for the
     ``cid IN (...)`` filter to prune all but ~nprobe·|Q| of them. The
     probed cids are already collected, so this lists the codes dir ONCE
-    (one listStatus: cell names only, no per-file recursion outside
-    probed cells), reads exactly the probed leaf dirs under a basePath
-    (cid is recovered from the path, inference types it INT exactly as
-    whole-tree discovery did), and keeps the ``isin`` partition filter
+    (cell names only, no per-file recursion outside probed cells),
+    reads exactly the probed leaf dirs under a basePath (cid is
+    recovered from the path), and keeps the ``isin`` partition filter
     so the scan still carries the PartitionFilters prune. A probed cell
     with no directory (possible: a centroid can itself be assigned to
     ANOTHER centroid's cell, so an empty cell writes no dir) contributes
-    zero rows — exactly what partition pruning produced. The data schema is pinned from the build contract: the
-    id column keeps the corpus's id dtype (the fingerprint-pinned build
-    corpus IS this corpus), and s/code are the INTs _pq_encode emits.
+    zero rows — exactly what partition pruning produced. The schema is
+    pinned from the build contract for both the read and the no-cell
+    frame: the id column keeps the corpus's id dtype (the
+    fingerprint-pinned build corpus IS this corpus), s/code are the INTs
+    _pq_encode emits, and cid is the centroids' BIGINT.
     This is also debris-proof: a crashed compaction's ``cid=N.old``
     leftovers can never widen cid to string here, because only exact
     ``cid=N`` names are ever read."""
     from pyspark.sql import types as T
 
-    from ..fsops import _fs_and_path
+    from ..fsops import fs_list
 
     codes_dir = f"{index_dir}/codes"
-    fs, codes_p = _fs_and_path(spark, codes_dir)
-    live = {
-        st.getPath().getName()
-        for st in fs.listStatus(codes_p)
-        if not st.isFile()
-    }
-    data_schema = T.StructType(
+    live = {e.name for e in fs_list(spark, codes_dir) if e.is_dir}
+    schema = T.StructType(
         [
             T.StructField(id_col, corpus.schema[id_col].dataType),
             T.StructField("s", T.IntegerType()),
             T.StructField("code", T.IntegerType()),
+            T.StructField("cid", T.LongType()),
         ]
     )
     paths = [f"{codes_dir}/cid={c}" for c in probe_cids if f"cid={c}" in live]
     if not paths:
-        return spark.createDataFrame(
-            [],
-            T.StructType(
-                data_schema.fields + [T.StructField("cid", T.IntegerType())]
-            ),
-        )
+        return spark.createDataFrame([], schema)
     return (
         spark.read.option("basePath", codes_dir)
-        .schema(data_schema)
+        .schema(schema)
         .parquet(*paths)
         .filter(F.col("cid").isin(probe_cids))
     )
@@ -367,14 +359,6 @@ def index_counts(spark: SparkSession, index_dir: str) -> dict:
     return {"meta_n": meta["n"], "indexed_n": indexed}
 
 
-def _parquet_files(fs, leaf_path) -> list:
-    return [
-        s
-        for s in fs.listStatus(leaf_path)
-        if s.isFile() and s.getPath().getName().endswith(".parquet")
-    ]
-
-
 def compact_index_postings(
     spark: SparkSession,
     index_dir: str,
@@ -425,14 +409,15 @@ def compact_index_postings(
     over parquet data files in the cid partitions (debris-healed cells
     count toward cells_compacted and files_after; their pre-heal file
     count is ill-defined and excluded from files_before)."""
-    from ..fsops import _fs_and_path
+    from ..fsops import fs_delete, fs_list
     from ..ops.layout import compact_parquet_dir
 
+    def parquet_files(leaf: str) -> list:
+        return [e for e in fs_list(spark, leaf) if e.name.endswith(".parquet")]
+
     codes_dir = f"{index_dir}/codes"
-    fs, codes_p = _fs_and_path(spark, codes_dir)
-    scratch = f"{codes_dir}/_compact_scratch"
-    scratch_p = _fs_and_path(spark, scratch)[1]
-    fs.delete(scratch_p, True)  # debris from a kill mid-batch-write
+    # debris from a kill mid-batch-write
+    fs_delete(spark, f"{codes_dir}/{_SCRATCH}", recursive=True)
     # Heal crash-window debris FIRST: a kill inside a previous call's
     # swap can leave cid=N.old / cid=N.new (possibly with cid=N gone).
     # Left alone they would be mis-read as live partitions — Spark's
@@ -442,41 +427,37 @@ def compact_index_postings(
     # (fsops.recover_swap) and recompacts the leaf, whose own swap
     # replaces the stale siblings, before any new work.
     debris_live = {
-        st.getPath().getName().rsplit(".", 1)[0]
-        for st in fs.listStatus(codes_p)
-        if not st.isFile()
-        and st.getPath().getName().startswith("cid=")
-        and st.getPath().getName().endswith((".old", ".new"))
+        e.name.rsplit(".", 1)[0]
+        for e in fs_list(spark, codes_dir)
+        if e.is_dir and e.name.startswith("cid=") and e.name.endswith((".old", ".new"))
     }
     for live in sorted(debris_live):
         compact_parquet_dir(spark, f"{codes_dir}/{live}", target_file_bytes)
     before = after = 0
     compacted = len(debris_live)
     small_leaves = []  # multi-file leaves fitting ONE target file
-    for st in fs.listStatus(codes_p):
-        name = st.getPath().getName()
+    for leaf in fs_list(spark, codes_dir):
         if (
-            st.isFile()
-            or not name.startswith("cid=")
-            or name.endswith((".old", ".new"))
+            not leaf.is_dir
+            or not leaf.name.startswith("cid=")
+            or leaf.name.endswith((".old", ".new"))
         ):
             continue
-        if name in debris_live:
-            after += len(_parquet_files(fs, st.getPath()))
+        files = parquet_files(leaf.uri)
+        if leaf.name in debris_live:
+            after += len(files)
             continue
-        leaf = st.getPath()
-        files = _parquet_files(fs, leaf)
         before += len(files)
         if len(files) <= 1:
             after += len(files)
             continue
-        if sum(f.getLen() for f in files) > target_file_bytes:
+        if sum(f.size for f in files) > target_file_bytes:
             # needs a computed multi-file output — per-leaf path
-            compact_parquet_dir(spark, leaf.toString(), target_file_bytes)
-            after += len(_parquet_files(fs, leaf))
+            compact_parquet_dir(spark, leaf.uri, target_file_bytes)
+            after += len(parquet_files(leaf.uri))
             compacted += 1
         else:
-            small_leaves.append(leaf)
+            small_leaves.append(leaf.uri)
     # Job accounting for the batch loop (the whole point of batching):
     # parquet schema inference launches its own footer-reading job per
     # read, so the schema is inferred ONCE (first batch) and passed
@@ -494,11 +475,10 @@ def compact_index_postings(
     try:
         for i in range(0, len(small_leaves), max(1, batch_cells)):
             group = small_leaves[i : i + max(1, batch_cells)]
-            n_after, schema = _compact_leaf_group(
-                spark, fs, codes_p, scratch, scratch_p, group, schema,
-                target_file_bytes,
+            schema = _compact_leaf_group(
+                spark, codes_dir, group, schema, target_file_bytes
             )
-            after += n_after
+            after += sum(len(parquet_files(leaf)) for leaf in group)
             compacted += len(group)
     finally:
         # conf.get(key, None) returns None — NOT the effective default
@@ -518,72 +498,56 @@ def compact_index_postings(
     }
 
 
-def _compact_leaf_group(
-    spark, fs, codes_p, scratch, scratch_p, group, schema, target_file_bytes
-):
-    """One batched rewrite: read ``group`` leaves together, write one
-    file per cell to scratch in ONE Spark job, then stage each cell at
-    ``cid=N.new`` and publish it with :func:`..fsops.swap_in`. Returns
-    (number of parquet files now in the group's leaves, the codes
-    schema) so the caller can pass the schema to later batches
+#: the batched compaction's output dir under ``codes`` (readers skip ``_`` names)
+_SCRATCH = "_compact_scratch"
+
+
+def _compact_leaf_group(spark, codes_dir, group, schema, target_file_bytes):
+    """One batched rewrite: read the ``group`` leaf dirs together, write
+    one file per cell to scratch in ONE Spark job, then stage each cell
+    at ``fsops.staged(leaf)`` and publish it with :func:`..fsops.swap_in`.
+    Returns the codes schema so the caller can pass it to later batches
     (skipping per-read inference jobs)."""
-    from ..fsops import _fs_and_path, _rename, swap_in
+    from ..fsops import fs_delete, fs_exists, fs_rename, staged, swap_in
     from ..ops.layout import compact_parquet_dir
 
-    fs.delete(scratch_p, True)
-    reader = spark.read.option("basePath", codes_p.toString())
+    scratch = f"{codes_dir}/{_SCRATCH}"
+    fs_delete(spark, scratch, recursive=True)
+    reader = spark.read.option("basePath", codes_dir)
     if schema is not None:
         reader = reader.schema(schema)
-    df = reader.parquet(*[leaf.toString() for leaf in group])
+    df = reader.parquet(*group)
     # each cid hashes into exactly one shuffle partition, so the
     # partitionBy write emits exactly one file per cell
     df.repartition(len(group), "cid").write.mode("overwrite").partitionBy(
         "cid"
     ).parquet(scratch)
-    n_after = 0
     for leaf in group:
-        src = _fs_and_path(spark, f"{scratch}/{leaf.getName()}")[1]
-        if not fs.exists(src):
+        src = f"{scratch}/{leaf.rsplit('/', 1)[1]}"
+        if not fs_exists(spark, src):
             # all-empty leaf: partitionBy wrote no dir — rare, fall
             # back to the per-leaf rewrite (emits one empty file)
-            compact_parquet_dir(spark, leaf.toString(), target_file_bytes)
+            compact_parquet_dir(spark, leaf, target_file_bytes)
         else:
-            new_p = _fs_and_path(spark, f"{leaf}.new")[1]
-            fs.delete(new_p, True)
-            _rename(fs, src, new_p)
-            swap_in(spark, leaf.toString())
-        n_after += len(_parquet_files(fs, leaf))
-    fs.delete(scratch_p, True)
-    return n_after, df.schema
+            fs_delete(spark, staged(leaf), recursive=True)
+            fs_rename(spark, src, staged(leaf))
+            swap_in(spark, leaf)
+    fs_delete(spark, scratch, recursive=True)
+    return df.schema
 
 
-def inventory_fingerprint(path: str, suffix: str | None = None) -> str:
-    """md5 over the file inventory (path, size, mtime_ns) of ``path`` —
-    a file or a tree, optionally filtered to ``suffix`` files.  Pure
-    os.stat metadata: no data is read.  The shared content-key helper
-    behind index caching here and bench.py's derived-dataset caches
-    (one implementation, so inventory-hash fixes propagate to both)."""
-    entries = []
-    if os.path.isdir(path):
-        for root, _dirs, files in sorted(os.walk(path)):
-            for f in sorted(files):
-                if suffix and not f.endswith(suffix):
-                    continue
-                st = os.stat(os.path.join(root, f))
-                entries.append(f"{root}/{f}:{st.st_size}:{st.st_mtime_ns}")
-    elif os.path.exists(path):
-        st = os.stat(path)
-        entries.append(f"{path}:{st.st_size}:{st.st_mtime_ns}")
-    return hashlib.md5("\n".join(entries).encode()).hexdigest()
+def corpus_fingerprint(
+    spark: SparkSession, data_dir: str, table: str = "embeddings.parquet"
+) -> str:
+    """Content key for index caching: :func:`..fsops.inventory_fingerprint`
+    of the corpus parquet (uri, size, mtime of every file, listed
+    through the Hadoop FS, so any scheme keys by content).  Any
+    regeneration of the testdata — same path, same row count, different
+    values — changes mtimes and therefore the key, so a cached index can
+    never silently serve stale results."""
+    from ..fsops import inventory_fingerprint
 
-
-def corpus_fingerprint(data_dir: str, table: str = "embeddings.parquet") -> str:
-    """Content key for index caching: md5 over the corpus parquet file
-    inventory (path, size, mtime_ns).  Any regeneration of the testdata
-    — same path, same row count, different values — changes mtimes and
-    therefore the key, so a cached index can never silently serve stale
-    results."""
-    return inventory_fingerprint(os.path.join(data_dir, table))
+    return inventory_fingerprint(spark, f"{data_dir.rstrip('/')}/{table}")
 
 
 def ensure_ivf_pq_index(
@@ -622,7 +586,7 @@ def ensure_ivf_pq_index(
     callers (the registered serve query and bench's _ann_serve_scaling)
     both honor it; a new caller with a different intake must key its
     index explicitly (pass stride/corpus_count directly) instead."""
-    key_src = corpus_fingerprint(sf_dir) + repr(sorted(build_kwargs.items()))
+    key_src = corpus_fingerprint(spark, sf_dir) + repr(sorted(build_kwargs.items()))
     if deferred_sizing is not None:
         key_src += ":derived-sizing"
     index_dir, hit = _cached_index(spark, cache_root, "ivf_pq", key_src)
@@ -648,13 +612,20 @@ def _code_version() -> str:
 def _cached_index(
     spark: SparkSession, cache_root: str, prefix: str, key_src: str
 ) -> tuple[str, bool]:
-    """(directory, hit) of the cached index keyed by ``key_src`` and the
-    code version, so an edit to the build code keys a fresh directory.
-    An interrupted swap is recovered first; a hit means a published
-    ``codes`` dir, read through the Hadoop FS like every other path."""
-    from ..fsops import fs_exists, recover_swap
+    """(directory, hit) of the cached index keyed by ``key_src``, named
+    ``{prefix}_{version}_{key}`` so an edit to the build code keys a
+    fresh directory. An interrupted swap is recovered first; a hit means
+    a published ``codes`` dir. A miss evicts every entry under
+    ``cache_root`` that another code version built."""
+    from ..fsops import fs_delete, fs_exists, fs_list, recover_swap
 
-    key = hashlib.md5((key_src + _code_version()).encode()).hexdigest()[:16]
-    index_dir = f"{cache_root}/{prefix}_{key}"
+    version = hashlib.md5(_code_version().encode()).hexdigest()[:8]
+    key = hashlib.md5(key_src.encode()).hexdigest()[:16]
+    index_dir = f"{cache_root}/{prefix}_{version}_{key}"
     recover_swap(spark, index_dir)
-    return index_dir, fs_exists(spark, f"{index_dir}/codes")
+    if fs_exists(spark, f"{index_dir}/codes"):
+        return index_dir, True
+    for e in fs_list(spark, cache_root):
+        if f"_{version}_" not in e.name:
+            fs_delete(spark, e.uri, recursive=True)
+    return index_dir, False

@@ -35,6 +35,7 @@ by the ledger's history.
 from __future__ import annotations
 
 import csv
+from contextlib import closing
 from dataclasses import dataclass, field
 from pathlib import Path
 
@@ -42,7 +43,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from .fsops import _fs_and_path, fs_exists, fs_move
+from .fsops import fs_exists, fs_lines, fs_list, fs_move
 from .functions import fold_extra_columns
 from .schemas import LEDGER_SCHEMA, RAW_SALES_SCHEMA
 
@@ -69,6 +70,7 @@ STATUS_DONE = "I"
 class ValidationResult:
     ok: list[str] = field(default_factory=list)
     rejected: dict[str, list[str]] = field(default_factory=dict)  # path -> missing cols
+    headers: dict[str, list[str]] = field(default_factory=dict)  # ok path -> its header
 
 
 #: the characters Java's ``String.trim`` strips (Spark's blank-line test)
@@ -82,21 +84,13 @@ def probe_columns(spark: SparkSession, path: str) -> list[str]:
     (so every scheme a Spark read reaches works) and parsed with ``csv``;
     a leading UTF-8 BOM is dropped, and empty or duplicate names are
     renamed the way Spark's CSV reader renames them."""
-    fs, hpath = _fs_and_path(spark, path)
-    stream = fs.open(hpath)
-    try:
-        # DataInputStream.readLine maps each byte to one char (latin-1),
-        # so the bytes come back intact and are decoded here as UTF-8
-        raw = stream.readLine()
-        if raw is not None:
-            raw = raw.removeprefix("\xef\xbb\xbf")  # UTF-8 BOM
+    with closing(fs_lines(spark, path)) as lines:
+        raw = next(lines, "").removeprefix("\ufeff")  # UTF-8 BOM
         while raw is not None and not raw.strip(_JAVA_TRIM):
-            raw = stream.readLine()
-    finally:
-        stream.close()
+            raw = next(lines, None)
     if raw is None:
         return []
-    names = next(csv.reader([raw.encode("latin-1").decode("utf-8", "replace")]))
+    names = next(csv.reader([raw]))
     case_sensitive = spark.conf.get("spark.sql.caseSensitive", "false") == "true"
     keys = [n if case_sensitive else n.lower() for n in names]
     dups = {k for k in keys if keys.count(k) > 1}
@@ -112,14 +106,17 @@ def validate_files(
     mandatory: tuple[str, ...] = MANDATORY_COLUMNS,
 ) -> ValidationResult:
     """Set-difference each file's header against the contract
-    (parity: main.py:110-121). Missing columns ⇒ whole-file reject."""
+    (parity: main.py:110-121). Missing columns ⇒ whole-file reject;
+    an accepted file's header is kept for :func:`union_files`."""
     res = ValidationResult()
     for p in paths:
-        missing = sorted(set(mandatory) - set(probe_columns(spark, p)))
+        header = probe_columns(spark, p)
+        missing = sorted(set(mandatory) - set(header))
         if missing:
             res.rejected[p] = missing
         else:
             res.ok.append(p)
+            res.headers[p] = header
     return res
 
 
@@ -232,15 +229,21 @@ def union_files(
     spark: SparkSession,
     paths: list[str],
     mandatory: tuple[str, ...] = MANDATORY_COLUMNS,
+    *,
+    headers: dict[str, list[str]] | None = None,
 ) -> DataFrame:
     """U1 — union the canonical frames by NAME (replaces the reference's
     positional union onto an empty JDBC seed frame, main.py:183-204).
 
-    Files are grouped by their exact header; each group is one
-    multi-path scan (see :func:`read_with_fold` for its typing)."""
+    Files are grouped by their exact header — taken from ``headers``
+    (e.g. :attr:`ValidationResult.headers`), probed for files not in
+    it; each group is one multi-path scan (see :func:`read_with_fold`
+    for its typing)."""
+    headers = headers or {}
     groups: dict[tuple[str, ...], list[str]] = {}
     for p in paths:
-        groups.setdefault(tuple(probe_columns(spark, p)), []).append(p)
+        header = headers[p] if p in headers else probe_columns(spark, p)
+        groups.setdefault(tuple(header), []).append(p)
     frames = [_read_group(spark, ps, list(h), mandatory) for h, ps in groups.items()]
     out = frames[0]
     for f in frames[1:]:
@@ -344,12 +347,14 @@ def ingest_batch(
     already-done → validate → route rejects → mark A → union. Caller
     transforms/writes the frame, then calls ``ledger.record(accepted,
     STATUS_DONE)`` (step 9)."""
-    files = sorted(str(p) for p in Path(landing_dir).glob("*.csv"))
+    files = [
+        e.uri for e in fs_list(spark, landing_dir) if not e.is_dir and e.name.endswith(".csv")
+    ]
     files = ledger.pending(files)
     result = validate_files(spark, files, mandatory)
     moved = route_rejected(spark, result.rejected, error_dir)
     if not result.ok:
         return None, IngestReport([], moved, 0)
     ledger.record(result.ok, STATUS_ACTIVE)
-    df = union_files(spark, result.ok, mandatory)
+    df = union_files(spark, result.ok, mandatory, headers=result.headers)
     return df, IngestReport(result.ok, moved, df.count())

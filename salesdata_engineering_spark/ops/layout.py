@@ -130,7 +130,7 @@ def compact_parquet_dir(
     cost, starved vectorized readers, NameNode/listing pressure); every
     streaming sink and per-batch writer produces them. The rewrite is
     one read -> repartition(ceil(bytes/target)) -> write to
-    ``{path}.new``, published by :func:`..fsops.swap_in`; a crash inside
+    ``fsops.staged(path)``, published by :func:`..fsops.swap_in`; a crash inside
     a previous call's swap is finished or rolled back at entry by
     :func:`..fsops.recover_swap`. Byte size comes from the FileSystem
     listing, so the helper works on any Hadoop FS URI.
@@ -143,24 +143,20 @@ def compact_parquet_dir(
     helper)."""
     import math
 
-    from ..fsops import _fs_and_path, recover_swap, swap_in
+    from ..fsops import fs_list, recover_swap, staged, swap_in
 
     recover_swap(spark, path)
-    fs, p = _fs_and_path(spark, path)
-    path = p.toString()  # normalize (a trailing slash would nest .new inside)
-    statuses = list(fs.listStatus(p))
-    subdirs = [
-        s.getPath().getName() for s in statuses if not s.isFile()
-    ]
+    entries = fs_list(spark, path)
+    subdirs = [e.name for e in entries if e.is_dir]
     if subdirs:
         raise ValueError(
             f"compact_parquet_dir: {path} contains subdirectories "
             f"({subdirs[:3]}...) — refusing to flatten a partitioned "
             "layout; compact each leaf partition directory instead"
         )
-    total = sum(s.getLen() for s in statuses if s.isFile())
+    total = sum(e.size for e in entries)
     n_files = max(1, math.ceil(total / target_file_bytes))
     df = spark.read.parquet(path)
-    df.repartition(n_files).write.mode("overwrite").parquet(f"{path}.new")
+    df.repartition(n_files).write.mode("overwrite").parquet(staged(path))
     swap_in(spark, path)
     return n_files

@@ -2570,7 +2570,7 @@ def q_sim_ivf_pq_index_serve(spark: SparkSession, sf_dir: str) -> DataFrame:
     "centroid/codebook sample ids — exactly the ids whose absence "
     "cannot perturb the frozen geometry, mirroring how production "
     "appends arrive AFTER the trained geometry is pinned. Staged "
-    "publication: base build + append happen under <dir>.new and "
+    "publication: base build + append happen under fsops.staged(<dir>) and "
     "fsops.swap_in publishes, so a crash mid-sequence can never leave "
     "a cached index missing its batch. Since r9 the staged sequence also "
     "runs compact_index_postings (small-files compaction of the "
@@ -2586,7 +2586,7 @@ def q_sim_ivf_pq_index_append(spark: SparkSession, sf_dir: str) -> DataFrame:
         corpus_fingerprint,
         search_ivf_pq_index,
     )
-    from .fsops import swap_in
+    from .fsops import staged, swap_in
 
     emb = _embs_nn(spark, sf_dir)
     corpus = emb.withColumn("embedding", F.col("embedding").cast("array<double>"))
@@ -2604,10 +2604,10 @@ def q_sim_ivf_pq_index_append(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     idx, hit = _cached_index(
         spark, _ANN_CACHE_ROOT, "ivf_pq_app",
-        corpus_fingerprint(sf_dir) + f"append:{stride}:{step}:{n}",
+        corpus_fingerprint(spark, sf_dir) + f"append:{stride}:{step}:{n}",
     )
     if not hit:
-        stage = f"{idx}.new"
+        stage = staged(idx)
         build_ivf_pq_index(
             spark, corpus.filter(~is_batch), stage,
             stride=stride, n_codes=64, corpus_count=n,

@@ -89,10 +89,11 @@ def read_events_stream(
     # returned 0 rows against a 21k-row oracle). recursive=True keeps
     # supporting a STAGED layout (nested part files, e.g. base data +
     # a watermark-advancing sentinel); the schema probe above already
-    # reads every layout transparently.
-    import os
+    # reads every layout transparently. The check goes through the
+    # Hadoop FS, so it holds on every scheme the stream can read.
+    from ..fsops import fs_is_dir
 
-    events_is_dir = os.path.isdir(events_path)
+    events_is_dir = fs_is_dir(spark, events_path)
     if recursive and not events_is_dir:
         # recursive=True widens the glob to *.parquet, which on a
         # single-FILE layout would anchor at sf_dir and slurp EVERY
@@ -235,7 +236,7 @@ def run_foreach_batch_upsert(
     exactly-once per epoch via the checkpoint).
 
     Merge = read current snapshot, union the batch, one max_by hash
-    aggregate per key, write to ``{out_dir}.new``, then
+    aggregate per key, write to ``fsops.staged(out_dir)``, then
     :func:`..fsops.swap_in` — the same snapshot kernel as the batch CDC
     operator applied incrementally (the merge plan READS the dir it
     replaces, so an in-place lazy overwrite would truncate its own
@@ -249,7 +250,7 @@ def run_foreach_batch_upsert(
     table format (Delta/Iceberg); the per-batch plan is identical."""
     from pyspark.sql import functions as F
 
-    from ..fsops import fs_exists, recover_swap, swap_in
+    from ..fsops import fs_exists, recover_swap, staged, swap_in
 
     spark = stream_df.sparkSession
     schema = stream_df.schema
@@ -268,7 +269,7 @@ def run_foreach_batch_upsert(
             ).alias("_s")
         )
         out = snap.select(key_col, *[F.col(f"_s.{c}").alias(c) for c in payload])
-        out.write.mode("overwrite").parquet(f"{out_dir}.new")
+        out.write.mode("overwrite").parquet(staged(out_dir))
         swap_in(spark, out_dir)  # the write above has fully consumed out_dir
 
     foreach_batch_pipeline(

@@ -125,72 +125,6 @@ def running_user_totals(events: DataFrame) -> DataFrame:
     )
 
 
-class _RunningTotalsProcessor:
-    """State-v2 (transformWithState) twin of ``_update_totals``.
-
-    Spark 4's arbitrary-state API v2: an object-oriented
-    StatefulProcessor with named, schema'd state variables managed per
-    key (here one ValueState holding the (n, total) accumulator), plus
-    timers and TTL the v1 applyInPandasWithState flat-tuple state lacks.
-    Same scale shape as v1: state hash-partitioned by key, Arrow-batched
-    input, O(1) state bytes per key.
-
-    ENVIRONMENT-BOUND, like the JDBC/object-store adapters: the v2
-    wire protocol needs ``google.protobuf``, which this sandbox does
-    not bake in — so the op is exercised by an import-gated test
-    (tests/test_streaming.py) that runs wherever protobuf exists, and
-    the driver-checked registry entry for running totals stays on the
-    dependency-free v1 (``stream_stateful_totals``), which this is
-    result-identical to by construction.
-    """
-
-    def init(self, handle) -> None:
-        self._totals = handle.getValueState("totals", STATE_SCHEMA)
-
-    def handleInputRows(self, key, rows, timerValues):
-        if self._totals.exists():
-            v, payload = self._totals.get()
-            fields = json.loads(bytes(payload).decode())
-            while v < _TOTALS_VERSION:
-                fields = _TOTALS_MIGRATIONS[v](fields)
-                v += 1
-            n, nvals, total = fields
-        else:
-            n, nvals, total = 0, 0, 0.0
-        for pdf in rows:
-            n += len(pdf)
-            nvals += int(pdf["value"].notna().sum())
-            total += float(pdf["value"].sum())
-        self._totals.update((_TOTALS_VERSION, _pack(n, nvals, total)))
-        yield pd.DataFrame(
-            {
-                "user_id": [key[0]],
-                "n_events": [n],
-                "total_value": [total if nvals else None],
-            }
-        )
-
-    def close(self) -> None:
-        pass
-
-
-def running_user_totals_v2(events: DataFrame) -> DataFrame:
-    """Per-user running (count, sum(value)) via transformWithState —
-    the Spark 4 state-v2 surface, result-identical to
-    :func:`running_user_totals` (same oracle covers both)."""
-    from pyspark.sql.streaming.stateful_processor import StatefulProcessor
-
-    # subclass created here so importing this module never requires the
-    # v2 API (kept import-safe for older sessions)
-    proc = type("RunningTotals", (_RunningTotalsProcessor, StatefulProcessor), {})()
-    return events.groupBy("user_id").transformWithStateInPandas(
-        statefulProcessor=proc,
-        outputStructType=OUT_SCHEMA,
-        outputMode="Update",
-        timeMode="None",
-    )
-
-
 CDC_OUT_SCHEMA = (
     "user_id bigint, last_op string, last_value double, "
     "last_ts timestamp, last_seq bigint"

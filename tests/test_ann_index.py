@@ -99,6 +99,8 @@ def test_ensure_rekeys_on_build_code_change(
     idx2 = ensure_ivf_pq_index(spark, corpus, sf_dir, root, **kw)
     assert idx2 != idx1 and built == [idx2]
     assert os.path.isdir(os.path.join(idx2, "codes"))
+    # the miss evicted the index the earlier code version built
+    assert os.listdir(root) == [os.path.basename(idx2)]
 
 
 def test_ensure_deferred_sizing_skips_corpus_scan_on_hit(
@@ -141,13 +143,48 @@ def test_ensure_deferred_sizing_skips_corpus_scan_on_hit(
     assert _sorted_rows(got1) == _sorted_rows(got2)
 
 
-def test_fingerprint_tracks_file_metadata(sf_dir, tmp_path):
-    fp1 = corpus_fingerprint(sf_dir)
-    assert fp1 == corpus_fingerprint(sf_dir)  # stable
+def test_fingerprint_tracks_file_metadata(spark, sf_dir, tmp_path):
+    fp1 = corpus_fingerprint(spark, sf_dir)
+    assert fp1 == corpus_fingerprint(spark, sf_dir)  # stable
     # a different directory inventory yields a different key
     other = tmp_path / "embeddings.parquet"
     other.write_bytes(b"x")
-    assert corpus_fingerprint(str(tmp_path)) != fp1
+    assert corpus_fingerprint(spark, str(tmp_path)) != fp1
+
+
+@pytest.fixture(scope="module")
+def slash_index(spark, corpus, tmp_path_factory):
+    """An index built through an ``index_dir`` with a trailing slash."""
+    n = corpus.count()
+    root = tmp_path_factory.mktemp("slash")
+    build_ivf_pq_index(
+        spark, corpus, f"{root}/idx/",
+        stride=_ivf_stride(corpus, n), n_codes=16, corpus_count=n,
+    )
+    return root
+
+
+def test_build_through_trailing_slash_publishes(spark, corpus, slash_index):
+    assert sorted(os.listdir(slash_index)) == ["idx"]
+    assert os.path.isdir(slash_index / "idx" / "codes")
+    got = search_ivf_pq_index(
+        spark, f"{slash_index}/idx", corpus, _queries_subset(corpus), k=5, nprobe=4
+    )
+    assert got.count() == 50
+
+
+def test_probed_codes_schema_matches_empty_probe(spark, corpus, slash_index):
+    """The read branch and the no-cell branch of _read_probed_codes
+    type cid alike (BIGINT, as the centroids do)."""
+    from salesdata_engineering_spark.ext.ann_index import _read_probed_codes
+
+    idx = f"{slash_index}/idx"
+    live = sorted(int(d.split("=")[1]) for d in os.listdir(f"{idx}/codes") if "=" in d)
+    read = _read_probed_codes(spark, idx, corpus, "vec_id", live[:2])
+    empty = _read_probed_codes(spark, idx, corpus, "vec_id", [max(live) + 1])
+    assert read.schema == empty.schema
+    assert read.schema["cid"].dataType.simpleString() == "bigint"
+    assert read.count() > 0 and empty.count() == 0
 
 
 def _batch_pred(n: int, stride: int, n_codes: int = 64):

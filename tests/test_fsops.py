@@ -11,20 +11,23 @@ no driver jar, so it skips cleanly here."""
 
 from __future__ import annotations
 
+import ast
 import os
+import re
+from pathlib import Path
 
 import pytest
 
+from salesdata_engineering_spark.ext.ann_index import corpus_fingerprint
 from salesdata_engineering_spark.fsops import (
     fs_delete,
     fs_exists,
     fs_list,
-    fs_mkdirs,
     fs_move,
     recover_swap,
     swap_in,
 )
-from salesdata_engineering_spark.ingest import route_rejected
+from salesdata_engineering_spark.ingest import FileLedger, ingest_batch, route_rejected
 
 REMOTE = os.environ.get("SPARK_GRAFT_REMOTE_FS_DIR")
 
@@ -40,20 +43,20 @@ REMOTE = os.environ.get("SPARK_GRAFT_REMOTE_FS_DIR")
 BACKENDS = ["local", "viewfs"] + (["remote"] if REMOTE else [])
 
 
+def _viewfs(spark, tmp_path) -> str:
+    """A viewfs:// URI mounted onto the local ``tmp_path``."""
+    authority = "mock-" + re.sub(r"[^a-z0-9]", "-", tmp_path.name.lower())
+    conf = spark.sparkContext._jsc.hadoopConfiguration()
+    conf.set(f"fs.viewfs.mounttable.{authority}.link./landing", f"file://{tmp_path}")
+    return f"viewfs://{authority}/landing"
+
+
 @pytest.fixture(params=BACKENDS)
 def fs_root(request, spark, tmp_path):
     if request.param == "local":
         yield f"file://{tmp_path}"
     elif request.param == "viewfs":
-        import re
-
-        authority = "mock-" + re.sub(r"[^a-z0-9]", "-", tmp_path.name.lower())
-        conf = spark.sparkContext._jsc.hadoopConfiguration()
-        conf.set(
-            f"fs.viewfs.mounttable.{authority}.link./landing",
-            f"file://{tmp_path}",
-        )
-        yield f"viewfs://{authority}/landing"
+        yield _viewfs(spark, tmp_path)
     else:
         root = f"{REMOTE.rstrip('/')}/fsops_test_{tmp_path.name}"
         yield root
@@ -78,13 +81,12 @@ def test_fs_lifecycle_list_move_delete(spark, fs_root):
         f"{fs_root}/sales_data_error",
         f"{fs_root}/sales_data_processed",
     )
-    fs_mkdirs(spark, landing)
     _put(spark, f"{landing}/sales_1.csv", "customer_id,price\n1,2.0\n")
     _put(spark, f"{landing}/sales_2.csv", "bad_header\nx\n")
     _put(spark, f"{landing}/notes.txt", "ignore me")
 
-    listed = fs_list(spark, landing, suffix=".csv")
-    assert [u.rsplit("/", 1)[1] for u in listed] == ["sales_1.csv", "sales_2.csv"]
+    listed = [e.uri for e in fs_list(spark, landing) if e.name.endswith(".csv")]
+    assert listed == [f"{landing}/sales_1.csv", f"{landing}/sales_2.csv"]
 
     moved = route_rejected(spark, {listed[1]: ["customer_id"]}, errors)
     assert [u.rsplit("/", 1)[1] for u in moved] == ["sales_2.csv"]
@@ -93,7 +95,7 @@ def test_fs_lifecycle_list_move_delete(spark, fs_root):
 
     done_uri = fs_move(spark, listed[0], done)
     assert fs_exists(spark, done_uri)
-    assert fs_list(spark, landing, suffix=".csv") == []
+    assert [e.name for e in fs_list(spark, landing)] == ["notes.txt"]
 
     assert fs_delete(spark, done_uri)
     assert not fs_exists(spark, done_uri)
@@ -103,7 +105,7 @@ def _tree(spark, live: str) -> dict[str, list[str]]:
     """The file names under live and its two swap siblings (absent
     directories omitted)."""
     return {
-        suffix: [u.rsplit("/", 1)[1] for u in fs_list(spark, f"{live}{suffix}")]
+        suffix: [e.name for e in fs_list(spark, f"{live}{suffix}")]
         for suffix in ("", ".new", ".old")
         if fs_exists(spark, f"{live}{suffix}")
     }
@@ -147,7 +149,6 @@ def test_swap_in_publishes_and_replaces(spark, fs_root):
 def test_fs_roundtrip_is_spark_readable(spark, fs_root):
     """Files managed through fsops stay readable by spark.read on the
     same URI — the whole point of dropping the download step."""
-    fs_mkdirs(spark, f"{fs_root}/zone")
     _put(spark, f"{fs_root}/zone/a.csv", "k,v\n1,x\n2,y\n")
     df = spark.read.csv(f"{fs_root}/zone/a.csv", header=True)
     assert df.count() == 2 and df.columns == ["k", "v"]
@@ -159,8 +160,6 @@ def test_fs_move_across_schemes_takes_copy_delete_path(spark, tmp_path):
     copy-then-delete an object-store cross-bucket move performs — and
     the file must land readable under the destination scheme while
     vanishing from the source."""
-    import re
-
     authority = "xmock-" + re.sub(r"[^a-z0-9]", "-", tmp_path.name.lower())
     dst_local = tmp_path / "dst"
     conf = spark.sparkContext._jsc.hadoopConfiguration()
@@ -168,13 +167,97 @@ def test_fs_move_across_schemes_takes_copy_delete_path(spark, tmp_path):
         f"fs.viewfs.mounttable.{authority}.link./zone", f"file://{dst_local}"
     )
     src = f"file://{tmp_path}/src/part.csv"
-    fs_mkdirs(spark, f"file://{tmp_path}/src")
     _put(spark, src, "k,v\n1,x\n")
     dst_uri = fs_move(spark, src, f"viewfs://{authority}/zone")
     assert dst_uri.startswith(f"viewfs://{authority}/zone")
     assert fs_exists(spark, dst_uri)
     assert not fs_exists(spark, src)
     assert (dst_local / "part.csv").exists()  # really landed on the mount
+
+
+_HEADER = "customer_id,store_id,product_name,sales_date,sales_person_id,price,quantity,total_cost"
+
+
+def test_ingest_batch_lists_a_non_file_scheme(spark, tmp_path):
+    """ingest_batch discovers the drop through the Hadoop FS, so a
+    viewfs:// landing dir is ingested like a local one, and the
+    accepted files are the landing URI joined with their names."""
+    root = _viewfs(spark, tmp_path)
+    landing = f"{root}/landing"
+    _put(spark, f"{landing}/a.csv", f"{_HEADER}\n6,121,oats,2024-01-01,1,212,4,848\n")
+    _put(spark, f"{landing}/b.csv", f"{_HEADER},note\n7,122,rice,2024-01-02,2,50,2,100,x\n")
+    _put(spark, f"{landing}/c.csv", "customer_id\n8\n")
+    df, report = ingest_batch(
+        spark, landing, f"{root}/errors", FileLedger(spark, f"{root}/ledger")
+    )
+    assert report.accepted == [f"{landing}/a.csv", f"{landing}/b.csv"]
+    assert report.rows == 2 and df.count() == 2
+    assert [e.name for e in fs_list(spark, f"{root}/errors")] == ["c.csv"]
+
+
+def test_corpus_fingerprint_tracks_a_non_file_scheme(spark, tmp_path):
+    """The index cache key lists through the Hadoop FS: a viewfs://
+    corpus keys by its files, not as the missing-path constant, and a
+    moved mtime re-keys it."""
+    root = _viewfs(spark, tmp_path)
+    _put(spark, f"{root}/sf/embeddings.parquet/part-0.parquet", "x")
+    fp = corpus_fingerprint(spark, f"{root}/sf")
+    assert fp != corpus_fingerprint(spark, f"{root}/missing")
+    part = tmp_path / "sf" / "embeddings.parquet" / "part-0.parquet"
+    os.utime(part, (part.stat().st_atime, part.stat().st_mtime + 10))
+    assert corpus_fingerprint(spark, f"{root}/sf") != fp
+
+
+#: product modules that must reach files only through ``fsops``
+_BOUNDARY = ["ingest.py", "io.py", "pipeline.py", "datasets.py", "ops", "ext", "streaming"]
+_FS_CALLS = {"os.walk", "os.stat", "os.rename", "os.path.isdir", "os.path.exists"}
+_FS_NAMES = {"hadoop", "_jvm", "listStatus", "getFileSystem", "glob", "shutil"}
+
+
+def _boundary_violations(path: Path) -> list[str]:
+    tree = ast.parse(path.read_text())
+    docstrings = {
+        id(node.body[0].value)
+        for node in ast.walk(tree)
+        if isinstance(node, (ast.Module, ast.ClassDef, ast.FunctionDef, ast.AsyncFunctionDef))
+        and node.body
+        and isinstance(node.body[0], ast.Expr)
+        and isinstance(node.body[0].value, ast.Constant)
+    }
+    found = []
+    for node in ast.walk(tree):
+        where = f"{path.name}:{getattr(node, 'lineno', 0)}"
+        if isinstance(node, ast.ImportFrom) and (node.module or "").endswith("fsops"):
+            found += [f"{where} imports {a.name}" for a in node.names if a.name.startswith("_")]
+        elif isinstance(node, (ast.Import, ast.ImportFrom)):
+            names = [getattr(node, "module", None) or ""] + [a.name for a in node.names]
+            found += [f"{where} imports {n}" for n in names if n.split(".")[0] in _FS_NAMES]
+        elif isinstance(node, ast.Attribute):
+            if node.attr in _FS_NAMES or ast.unparse(node) in _FS_CALLS:
+                found.append(f"{where} uses {ast.unparse(node)}")
+        elif isinstance(node, ast.Name) and node.id in _FS_NAMES:
+            found.append(f"{where} uses {node.id}")
+        elif (
+            isinstance(node, ast.Constant)
+            and isinstance(node.value, str)
+            and id(node) not in docstrings
+            and "hadoop" in node.value
+        ):
+            found.append(f"{where} names {node.value!r}")
+    return found
+
+
+def test_only_fsops_touches_the_filesystem():
+    """Listing, stat, rename and Hadoop handles stay inside fsops: the
+    pipeline, ingest, io, dataset, ops, ext and streaming modules pass
+    plain URI strings to it, so every scheme takes the same code path."""
+    pkg = Path(__file__).resolve().parents[1] / "salesdata_engineering_spark"
+    files = []
+    for name in _BOUNDARY:
+        files += sorted((pkg / name).rglob("*.py")) if (pkg / name).is_dir() else [pkg / name]
+    assert len(files) > 10
+    violations = [v for f in files for v in _boundary_violations(f)]
+    assert violations == []
 
 
 JDBC_URL = os.environ.get("SPARK_GRAFT_JDBC_URL")

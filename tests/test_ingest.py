@@ -139,6 +139,27 @@ def test_ingest_job_count_pin(spark, tmp_path, landing):
     assert len(report.accepted) == 1 and n <= 5, n
 
 
+def test_ingest_probes_each_file_once(spark, tmp_path, landing, monkeypatch):
+    """validate_files hands the accepted files' headers to union_files,
+    so a 4-file drop with 1 reject costs 4 header probes, not 4 + 3."""
+    import salesdata_engineering_spark.ingest as ingest
+
+    (landing / "sales_data_2024-01-03.csv").write_text(VALID_CSV)
+    probed = []
+    real_probe = ingest.probe_columns
+
+    def counting_probe(spark_, path):
+        probed.append(path)
+        return real_probe(spark_, path)
+
+    monkeypatch.setattr(ingest, "probe_columns", counting_probe)
+    ledger = FileLedger(spark, str(tmp_path / "ledger"))
+    df, report = ingest_batch(spark, str(landing), str(tmp_path / "errors"), ledger)
+    assert len(report.accepted) == 3 and len(report.rejected) == 1
+    assert df.count() == 6
+    assert len(probed) == 4
+
+
 @pytest.mark.parametrize(
     "text",
     [

@@ -575,12 +575,12 @@ def test_index_serve_scan_is_partition_pruned(spark, sf_dir):
     plan = plan_of(QUERIES["sim_ivf_pq_index_serve"].fn(spark, sf_dir))
     assert "CartesianProduct" not in plan
     assert "MapInPandas" not in plan and "ArrowEvalPython" not in plan
-    m = re.search(r"PartitionFilters: \[cid#\d+ IN(SET)?\b", plan)
+    m = re.search(r"PartitionFilters: \[cid#\d+L IN(SET)?\b", plan)
     assert m, plan[:2500]
-    # serving joins the pruned codes scan on (cid, s, code); the cid
-    # partition column reads back INT and the probe side is BIGINT, so
-    # the join key may carry a cast
-    assert re.search(r"BroadcastHashJoin \[(cast\()?cid#", plan), plan[:1500]
+    # serving joins the pruned codes scan on (cid, s, code); the codes
+    # read pins the cid partition column to BIGINT, the probe side's
+    # type, so the join key carries no cast
+    assert re.search(r"BroadcastHashJoin \[cid#\d+L, ", plan), plan[:1500]
 
 
 def test_rerank_python_stage_is_candidate_bounded(spark, sf_dir):

@@ -96,6 +96,18 @@ def test_stream_source_reads_directory_layout(spark, sf_dir, dir_layout_sf):
     assert drained.count() == batch_n
 
 
+def test_stream_source_reads_directory_layout_over_viewfs(spark, sf_dir, dir_layout_sf):
+    """The layout check lists through the Hadoop FS, so a directory
+    layout behind a non-file scheme is read as a directory too."""
+    conf = spark.sparkContext._jsc.hadoopConfiguration()
+    conf.set("fs.viewfs.mounttable.dirlayout.link./sf", f"file://{dir_layout_sf}")
+    batch_n = spark.read.parquet(os.path.join(sf_dir, "events.parquet")).count()
+    drained = run_to_completion(
+        read_events_stream(spark, "viewfs://dirlayout/sf"), output_mode="append"
+    )
+    assert drained.count() == batch_n
+
+
 def test_stream_source_recursive_rejects_single_file_layout(spark, sf_dir):
     # recursive=True anchors the glob at *.parquet; on a single-file
     # layout that would read EVERY table under the events schema —

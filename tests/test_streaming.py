@@ -280,28 +280,6 @@ def test_read_events_stream_does_not_flip_nanos_conf(spark, tmp_path):
             spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", prior)
 
 
-def test_transform_with_state_v2_matches_group_by(spark, tmp_path):
-    """Spark 4 state-v2 surface (transformWithStateInPandas): the
-    running-totals StatefulProcessor must equal the batch GROUP BY.
-    Environment-gated: the v2 wire protocol needs google.protobuf,
-    which this sandbox does not ship — skips cleanly there and runs
-    wherever protobuf exists."""
-    pytest.importorskip("google.protobuf")
-    from salesdata_engineering_spark.streaming.runner import run_to_completion
-    from salesdata_engineering_spark.streaming.stateful import running_user_totals_v2
-
-    root = str(tmp_path)
-    _write_file(
-        spark,
-        [(1, None, 10, 1.5), (2, None, 10, 2.5), (3, None, 20, 4.0)],
-        f"{root}/batch_0",
-    )
-    stream = _read_stream(spark, root).select("user_id", "value")
-    out = run_to_completion(running_user_totals_v2(stream), output_mode="update")
-    rows = {r.user_id: (r.n_events, r.total_value) for r in out.collect()}
-    assert rows == {10: (2, 4.0), 20: (1, 4.0)}
-
-
 def test_read_events_stream_bad_path_restores_conf(spark):
     """A probe failure that is NOT a nanos rejection (missing path) must
     not leave the legacy nanos conf flipped (review round 5)."""

@@ -39,7 +39,7 @@ _NORMALISE = [
     (re.compile(r"(ExistingRDD|LogicalRDD)\[[^\]]*\]"), r"\1"),
     (re.compile(r"\w*RDD\[\d+\]"), "RDD"),
     (re.compile(r"at \w+ at [\w.]+:\d+"), ""),
-    (re.compile(r"(ivf_pq_(?:app_)?)[0-9a-f]{16}"), r"\1<key>"),
+    (re.compile(r"(ivf_pq_(?:app_)?)[0-9a-f]{8}_[0-9a-f]{16}"), r"\1<key>"),
 ]
 
 

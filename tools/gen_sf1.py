@@ -221,21 +221,21 @@ def generate(
         ).parquet(f"{out_dir}/{name}.parquet")
 
 
-def source_fingerprint(src_dir: str) -> str:
-    """Content key for the derived-scale caches: stat metadata of every
-    parquet under ``src_dir`` (the marker file itself is excluded by the
-    suffix filter) plus the generator source — so a regenerated source
+def source_fingerprint(spark: SparkSession, src_dir: str) -> str:
+    """Content key for the derived-scale caches: listing metadata of
+    every parquet under ``src_dir`` (the marker file itself is excluded
+    by the suffix filter) plus the generator source — so a regenerated source
     dataset OR a changed gen_sf1.py invalidates the cache (ADVICE r8: a
     bare isdir check let a stale .data/sf3 survive an sf1 regeneration
     and silently cross-compare datasets)."""
     import hashlib
 
-    from salesdata_engineering_spark.ext.ann_index import inventory_fingerprint
+    from salesdata_engineering_spark.fsops import inventory_fingerprint
 
     with open(os.path.abspath(__file__), "rb") as fh:
         gen_src = fh.read()
     return hashlib.md5(
-        inventory_fingerprint(src_dir, suffix=".parquet").encode() + gen_src
+        inventory_fingerprint(spark, src_dir, suffix=".parquet").encode() + gen_src
     ).hexdigest()
 
 
@@ -259,7 +259,7 @@ def ensure_derived(spark: SparkSession, src_dir: str, dst_dir: str, reps: int) -
     import shutil
 
     marker = os.path.join(dst_dir, "_FINGERPRINT")
-    want = f"{source_fingerprint(src_dir)}:reps={reps}"
+    want = f"{source_fingerprint(spark, src_dir)}:reps={reps}"
     if os.path.isdir(dst_dir):
         if os.path.exists(marker):
             with open(marker) as fh:
