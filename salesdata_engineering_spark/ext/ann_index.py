@@ -51,6 +51,7 @@ import os
 from pyspark.sql import DataFrame, Row, SparkSession
 from pyspark.sql import functions as F
 
+from ..session import local_frame
 from .similarity import (
     _adc_candidates,
     _cell_codes,
@@ -141,8 +142,8 @@ def build_ivf_pq_index(
     enc.select(id_col, "s", "code", "cid").write.mode("overwrite").partitionBy(
         "cid"
     ).parquet(f"{new_dir}/codes")
-    spark.createDataFrame(
-        [(dim, n_sub, n_codes, stride, n, id_col)], _META_SCHEMA
+    local_frame(
+        spark, [(dim, n_sub, n_codes, stride, n, id_col)], _META_SCHEMA
     ).write.mode("overwrite").parquet(f"{new_dir}/meta")
     cents_b.select("s", "c", "_cchunk", "_cc").write.mode("overwrite").parquet(
         f"{new_dir}/codebooks"
@@ -199,7 +200,7 @@ def _read_probed_codes(
     )
     paths = [f"{codes_dir}/cid={c}" for c in probe_cids if f"cid={c}" in live]
     if not paths:
-        return spark.createDataFrame([], schema)
+        return local_frame(spark, [], schema)
     return (
         spark.read.option("basePath", codes_dir)
         .schema(schema)
@@ -251,7 +252,7 @@ def search_ivf_pq_index(
     probe_cids = sorted({r["cid"] for r in probe_rows})
     # re-create from the collected rows (schema derived, not hardcoded)
     # so the probe subtree is not recomputed for the join below
-    probes_b = F.broadcast(spark.createDataFrame(probe_rows, probes.schema))
+    probes_b = F.broadcast(local_frame(spark, probe_rows, probes.schema))
     codes = _read_probed_codes(spark, index_dir, corpus, id_col, probe_cids)
     dtp = _pq_query_tables(
         queries, _read_codebooks(spark, index_dir), n_sub, dim, query_id_col,

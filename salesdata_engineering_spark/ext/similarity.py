@@ -104,6 +104,7 @@ def cosine(a: Column | str, b: Column | str, dim: int | None = None) -> Column:
 # pair-scan stream side of the ANN kernels needs the same guard — a
 # broadcast nested-loop over a 1-partition stream runs in ONE task.
 from ..ops.partitioning import spread as _spread  # noqa: E402
+from ..session import local_frame  # noqa: E402
 
 
 def _rank_topk(sim: DataFrame, k: int, id_col: str, query_id_col: str) -> DataFrame:
@@ -567,9 +568,14 @@ def _exact_rerank(
     """Shared final stage of every two-stage ANN (quantized, composed
     IVF+quantized, PQ-ADC): re-score the |Q|·m candidate pairs at full
     precision and emit per-query top-k as (query_id, neighbor_id, rk,
-    cosine_sim). Candidates are tiny, so the corpus join broadcasts the
-    candidate side and only full-precision vectors for survivors are
-    ever read."""
+    cosine_sim). The corpus join carries no hint, so AQE picks its
+    build side from runtime sizes: at sf0.01 the final plan of
+    ``search_ivf_pq_index`` broadcasts the CORPUS side (a
+    ``BroadcastQueryStage`` over the ``[id, vector]`` corpus scan) and
+    streams the candidates, so every search reads every full-precision
+    vector, not only the survivors'. A corpus past the broadcast
+    threshold gets a shuffle join instead, which scans and shuffles the
+    whole corpus per search."""
     rr = (
         cand.join(corpus.select(id_col, vec_col), id_col)
         .join(
@@ -796,11 +802,18 @@ def _local_broadcast(df: DataFrame, limit: int | None = None) -> tuple[DataFrame
       density precondition) into the same single job instead of paying
       a separate driver-blocking count.
 
-    Values are bit-identical: collect/createDataFrame round-trips
-    doubles and arrays exactly, and every consumer joins or
-    cross-joins the frame by key, so local-relation row order cannot
-    matter. Driver exposure is UNCHANGED vs F.broadcast (the exchange
-    collected to the driver anyway).
+    The rows go back in through :func:`..session.local_frame`, an Arrow
+    table, so the leaf is a ``LocalRelation``: no Python worker is
+    started to serve them. Built from the pickled row list instead, the
+    first job reading one of these frames made the JVM fork a
+    ``pyspark.daemon`` worker in every fresh session; through Arrow,
+    ``build_ivf_pq_index`` in fresh sessions 2-4 of one JVM fell from
+    4.2-4.6 s to 2.6-3.4 s (``local[2]``, the 500-vector sf0.01
+    corpus). Values are bit-identical: Arrow carries doubles
+    (-0.0, NaN, inf included), NULLs and arrays exactly, and every
+    consumer joins or cross-joins the frame by key, so local-relation
+    row order cannot matter. Driver exposure is UNCHANGED vs
+    F.broadcast (the exchange collected to the driver anyway).
 
     Scope note (measured, r15): this is a win where the subtree was
     paying SEPARATE driver-blocking jobs (the PQ density count; the
@@ -817,7 +830,7 @@ def _local_broadcast(df: DataFrame, limit: int | None = None) -> tuple[DataFrame
     spark = df.sparkSession
     src = df.limit(limit) if limit is not None else df
     rows = src.collect()
-    return F.broadcast(spark.createDataFrame(rows, df.schema)), rows
+    return F.broadcast(local_frame(spark, rows, df.schema)), rows
 
 
 def _local_centroids(centroids: DataFrame, dim: int) -> DataFrame:

@@ -23,6 +23,7 @@ from pyspark.sql import functions as F
 from .datasets import load_tables
 from .ext.hashing import md5_long, sql_md5_long
 from .registry import register
+from .session import local_frame
 from .streaming.runner import read_events_stream, run_to_completion
 from .streaming.windows import session_agg, sliding_agg, tumbling_agg
 
@@ -3155,7 +3156,8 @@ def q_events_attribution_shapley(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("s")
         .agg(F.coalesce(F.sum("cnt"), F.lit(0)).cast("bigint").alias("val"))
     )
-    ch = spark.createDataFrame(
+    ch = local_frame(
+        spark,
         [(0, "click"), (1, "error"), (2, "signup"), (3, "view")],
         "cbit int, channel string",
     )

@@ -50,6 +50,7 @@ from .ext.text import (
     winnow_fingerprint,
 )
 from .registry import register
+from .session import local_frame
 
 SQL_TOKENS = r"string_split_regex(text, '\s+')"
 SQL_HASH60 = "('0x' || substr(md5({x}), 1, 15))::BIGINT"
@@ -3735,7 +3736,7 @@ def q_text_vocab_coverage_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.row_number().over(Window.orderBy(F.col("c").desc(), "term")).alias("rk"),
         F.sum("c").over(w).alias("cumtok"),
     )
-    marks = spark.createDataFrame([(100,), (1000,), (10000,)], ["top_n"])
+    marks = local_frame(spark, [(100,), (1000,), (10000,)], "top_n bigint")
     return (
         marks.crossJoin(cum)
         .crossJoin(F.broadcast(t))
@@ -4209,8 +4210,8 @@ def q_text_bpe_merge_steps(spark: SparkSession, sf_dir: str) -> DataFrame:
                 )
             ),
         )
-    return spark.createDataFrame(
-        rules, "step int, pair string, merged string, pair_count bigint"
+    return local_frame(
+        spark, rules, "step int, pair string, merged string, pair_count bigint"
     )
 
 

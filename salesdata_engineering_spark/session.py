@@ -13,14 +13,20 @@ pin the settings that matter for correctness parity and for scale:
   ``spark.sql.adaptive.advisoryPartitionSizeInBytes`` (AQE coalescing
   makes the static number much less sensitive).
 - Arrow enabled so any Pandas-UDF extension operators move data in
-  vectorized batches instead of pickled rows.
+  vectorized batches instead of pickled rows. Driver-side rows the
+  engine turns into a frame itself (index artifacts, probe sets, ledger
+  rows, small registry constants) go through :func:`local_frame`, which
+  builds them as an Arrow table whatever that setting says: Spark gets
+  a ``LocalRelation`` and no Python worker is ever started for it.
 """
 
 from __future__ import annotations
 
 import os
+from collections.abc import Sequence
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import StructType, _make_type_verifier
 
 
 def get_spark(
@@ -70,3 +76,38 @@ def get_spark(
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     return spark
+
+
+def local_frame(
+    spark: SparkSession, rows: Sequence[Sequence], schema: StructType | str
+) -> DataFrame:
+    """A frame over a few driver-side rows (tuples or ``Row``s in schema
+    order; ``schema`` is a StructType or a DDL string), built as a
+    ``pyarrow.Table`` so the plan leaf is a ``LocalRelation``.
+
+    ``createDataFrame(list)`` pickles the rows into a Python RDD, and the
+    first job that reads one makes the JVM fork a ``pyspark.daemon``
+    worker -- again in every fresh session, since ``spark.stop()`` kills
+    it. An Arrow table reaches the JVM as Arrow batches, so nothing on
+    the executor side runs Python.
+
+    Each row still goes through the verifier ``createDataFrame`` runs
+    (a wrong-typed value raises), so the Arrow conversion never coerces
+    a value the row path would have rejected. Timestamps are not used
+    by any caller: Arrow reads a naive ``datetime`` as UTC, the row path
+    as the driver's local time.
+    """
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    if isinstance(schema, str):
+        schema = StructType.fromDDL(schema)
+    verify = _make_type_verifier(schema)
+    for row in rows:
+        verify(row)
+    arrow = to_arrow_schema(schema)
+    columns = list(zip(*rows)) if rows else [()] * len(arrow)
+    table = pa.Table.from_arrays(
+        [pa.array(col, type=f.type) for col, f in zip(columns, arrow)], schema=arrow
+    )
+    return spark.createDataFrame(table, schema)
