@@ -19,10 +19,10 @@ Layout:
     schemas.py    canonical sales schema + contract (config.py:40 parity)
     datasets.py   testdata loaders / temp-view registration
     functions.py  scalar helpers F1-F8 (money decimals, month keys, ...)
-    ops/          one module per SURVEY §2 operator category
+    ops/          operators the DataFrame API lacks as one call
     marts.py      customer + sales-team mart pipelines (the flagship)
-    ingest/       validation / routing / ledger lifecycle (S1-S8)
-    io/           sources & sinks
+    ingest.py     validation / routing / ledger lifecycle (S1-S8)
+    io.py         sources & sinks
     ext/          dedup / similarity / text / json extensions (X1-X4)
     streaming/    structured-streaming variants of the pipeline
 """

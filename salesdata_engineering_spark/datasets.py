@@ -93,15 +93,16 @@ def register_views(spark: SparkSession, sf_dir: str = DEFAULT_SF_DIR) -> dict[st
     return tables
 
 
-def canonical_sales(tables: dict[str, DataFrame], with_product: bool = False) -> DataFrame:
+def canonical_sales(tables: dict[str, DataFrame]) -> DataFrame:
     """Build the reference-shaped sales fact from the testdata star schema.
 
     Joins are fact ⋈ broadcast(dim): `orders` is bigger than the dims but
     still broadcastable at test scale; at 100 TB `orders` would be a
-    shuffle-hash/sort-merge join on l_orderkey while `customer`/`part`
-    stay broadcast — Catalyst + AQE pick per-size, we hint only the
-    genuinely-small sides. (Parity: the three dimension joins at
+    shuffle-hash/sort-merge join on l_orderkey while `customer` stays
+    broadcast — Catalyst + AQE pick per-size, we hint only the
+    genuinely-small side. (Parity: the dimension joins at
     `src/main/transformations/jobs/dimension_tables_join.py:17-54`.)
+    ``product_name`` is ``part_<l_partkey>``, with no join to ``part``.
     """
     from .ops.partitioning import spread
 
@@ -114,19 +115,12 @@ def canonical_sales(tables: dict[str, DataFrame], with_product: bool = False) ->
         li.join(orders, li.l_orderkey == orders.o_orderkey, "inner")
         .join(F.broadcast(cust), orders.o_custkey == cust.c_custkey, "inner")
     )
-    if with_product:
-        part = tables["part"]
-        fact = fact.join(F.broadcast(part), li.l_partkey == part.p_partkey, "inner")
-        product_name = F.col("p_name")
-    else:
-        product_name = F.concat(F.lit("part_"), F.col("l_partkey").cast("string"))
-
     price = F.col("l_extendedprice").cast(MONEY)
     discount = F.col("l_discount").cast(MONEY)
     return fact.select(
         F.col("o_custkey").cast("int").alias("customer_id"),
         F.col("c_nationkey").cast("int").alias("store_id"),
-        product_name.alias("product_name"),
+        F.concat(F.lit("part_"), F.col("l_partkey").cast("string")).alias("product_name"),
         F.date_format("o_orderdate", "yyyy-MM-dd").alias("sales_date"),
         F.col("l_suppkey").cast("int").alias("sales_person_id"),
         price.alias("price"),
@@ -135,7 +129,7 @@ def canonical_sales(tables: dict[str, DataFrame], with_product: bool = False) ->
     )
 
 
-#: DuckDB CTE mirroring canonical_sales(with_product=False) — prefix for
+#: DuckDB CTE mirroring canonical_sales — prefix for
 #: oracle SQL strings that consume the canonical fact.
 CANONICAL_SALES_SQL = """
     SELECT CAST(o.o_custkey AS INTEGER)  AS customer_id,

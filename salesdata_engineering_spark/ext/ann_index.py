@@ -221,7 +221,6 @@ def search_ivf_pq_index(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     query_id_col: str = "query_id",
-    small_queries: bool = True,
 ) -> DataFrame:
     """Serve ANN top-k from a persisted IVF-PQ index.
 
@@ -245,8 +244,8 @@ def search_ivf_pq_index(
     meta = _read_meta(spark, index_dir)
     dim, n_sub = meta["dim"], meta["n_sub"]
     probes = _probe_cells(
-        queries, _read_centroids(spark, index_dir, dim), nprobe, small_queries,
-        query_id_col, vec_col, dim,
+        queries, _read_centroids(spark, index_dir, dim), nprobe, query_id_col,
+        vec_col, dim,
     )
     probe_rows = probes.collect()  # bounded: |Q| · nprobe rows
     probe_cids = sorted({r["cid"] for r in probe_rows})

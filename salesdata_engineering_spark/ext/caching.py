@@ -23,17 +23,16 @@ from pyspark.storagelevel import StorageLevel
 _LIVE: dict[str, DataFrame] = {}
 
 
-def swap_persist(
-    key: str, df: DataFrame, level: StorageLevel = StorageLevel.MEMORY_AND_DISK
-) -> DataFrame:
-    """Persist ``df``, releasing the frame previously persisted under
-    ``key`` (non-blocking — executors clean up asynchronously)."""
+def swap_persist(key: str, df: DataFrame) -> DataFrame:
+    """Persist ``df`` (MEMORY_AND_DISK), releasing the frame previously
+    persisted under ``key`` (non-blocking — executors clean up
+    asynchronously)."""
     prev = _LIVE.pop(key, None)
     if prev is not None:
         try:
             prev.unpersist(blocking=False)
         except Exception:
             pass  # session of the old frame may already be stopped
-    out = df.persist(level)
+    out = df.persist(StorageLevel.MEMORY_AND_DISK)
     _LIVE[key] = out
     return out

@@ -346,7 +346,6 @@ def _assign_cells(
     keep: int,
     vec_col: str,
     dim: int,
-    tiny: bool = False,
     with_vec: bool = True,
 ) -> DataFrame:
     """Assign each vector to its ``keep`` nearest centroids:
@@ -375,12 +374,10 @@ def _assign_cells(
     the quantized query frame anyway, so the join-back was a dead
     materialization barrier).
 
-    ``tiny=True`` (caller's promise that df is a bounded QUERY batch,
-    |df|·|cells| rows small) coalesces the keep>1 window onto one
-    partition — a narrow dependency replacing the window's hash
-    exchange + 32-task sort (measured: composed ANN 2.6 → 2.1 s at
-    sf0.1, pure stage-latency). Never set it for corpus-sized frames:
-    a single partition serializes the sort.
+    ANN query frames are bounded batches, so the keep>1 window is
+    coalesced onto one partition — a narrow dependency replacing the
+    window's hash exchange + 32-task sort (measured: composed ANN
+    2.6 → 2.1 s at sf0.1).
 
     The ranking score is ``dot(v, c) / norm(c)`` — NOT the full cosine.
     The row's own norm is a positive per-row constant, so it scales
@@ -410,9 +407,7 @@ def _assign_cells(
             ).alias("cid")
         )
         return picked.join(df, out_id).select(out_id, vec_col, "cid")
-    scored = df.crossJoin(cents).select(F.col(out_id), "cid", sim)
-    if tiny:
-        scored = scored.coalesce(1)
+    scored = df.crossJoin(cents).select(F.col(out_id), "cid", sim).coalesce(1)
     w = Window.partitionBy(out_id).orderBy(F.col("_cs").desc(), "cid")
     picked = (
         scored.withColumn("_crk", F.row_number().over(w))
@@ -462,15 +457,14 @@ def _assign_corpus(
 
 
 def _probe_cells(
-    queries: DataFrame, cents: DataFrame, nprobe: int, small_queries: bool,
+    queries: DataFrame, cents: DataFrame, nprobe: int,
     query_id_col: str, vec_col: str, dim: int, with_vec: bool = False,
 ) -> DataFrame:
     """(query_id, cid): each query's ``nprobe`` nearest cells —
     (query_id, vec, cid) with ``with_vec``."""
     return _assign_cells(
         queries.select(F.col(query_id_col), F.col(vec_col)),
-        cents, query_id_col, nprobe, vec_col, dim,
-        tiny=small_queries, with_vec=with_vec,
+        cents, query_id_col, nprobe, vec_col, dim, with_vec=with_vec,
     )
 
 
@@ -485,7 +479,6 @@ def ivf_ann_topk(
     vec_col: str = "embedding",
     query_id_col: str = "query_id",
     centroids: DataFrame | None = None,
-    small_queries: bool = True,
 ) -> DataFrame:
     """IVF-flat ANN: partition the corpus into inverted cells around
     centroids, search only the ``nprobe`` cells nearest each query.
@@ -502,8 +495,7 @@ def ivf_ann_topk(
     cents = _ivf_centroids(corpus, centroids, stride, dim, id_col, vec_col)
     cells = _assign_corpus(corpus, cents, id_col, vec_col, dim)
     probes = _probe_cells(
-        queries, cents, nprobe, small_queries, query_id_col, vec_col, dim,
-        with_vec=True,
+        queries, cents, nprobe, query_id_col, vec_col, dim, with_vec=True
     ).select(query_id_col, F.col(vec_col).alias("_qvec"), "cid")
     cand = (
         cells.join(probes, "cid")
@@ -668,7 +660,6 @@ def ivf_quantized_topk(
     vec_col: str = "embedding",
     query_id_col: str = "query_id",
     centroids: DataFrame | None = None,
-    small_queries: bool = True,
 ) -> DataFrame:
     """The composed sublinear ANN both halves promise: IVF cell pruning
     (:func:`ivf_ann_topk`) feeding the int8-quantized scan + exact
@@ -676,10 +667,7 @@ def ivf_quantized_topk(
 
     Stage 0 assigns the corpus to inverted cells and each query to its
     ``nprobe`` nearest cells (broadcast centroids, codegen'd dots — no
-    shuffle; ``small_queries=False`` opts the probe ranking out of its
-    single-partition coalesce when the query frame is corpus-sized —
-    e.g. the self-join near-dup shape). Stage 1 scores ONLY the probed
-    cells' vectors on the
+    shuffle). Stage 1 scores ONLY the probed cells' vectors on the
     quantized representation: the scoring join is an equi-join on
     ``cid``, so the scan touches ~nprobe/n_cells of the corpus — and
     what it reads is int8-quantized (4× less memory traffic than
@@ -700,9 +688,7 @@ def ivf_quantized_topk(
     vectors fetched only for the |Q|·m re-rank."""
     cents = _ivf_centroids(corpus, centroids, stride, dim, id_col, vec_col)
     cells = _assign_corpus(corpus, cents, id_col, vec_col, dim)
-    probes = _probe_cells(
-        queries, cents, nprobe, small_queries, query_id_col, vec_col, dim
-    )
+    probes = _probe_cells(queries, cents, nprobe, query_id_col, vec_col, dim)
     cq = quantize_cols(cells, vec_col, dim, "_c")
     pq = probes.join(
         _quantized_queries(queries, query_id_col, vec_col, dim), query_id_col
@@ -780,7 +766,7 @@ def _pq_chunks(vec_col: str, n_sub: int, dim: int) -> Column:
     )
 
 
-def _local_broadcast(df: DataFrame, limit: int | None = None) -> tuple[DataFrame, list]:
+def _local_broadcast(df: DataFrame) -> tuple[DataFrame, list]:
     """Materialize a BOUNDED index frame (centroids / PQ codebooks) to
     the driver once and return ``(broadcast local relation, rows)``.
 
@@ -823,14 +809,11 @@ def _local_broadcast(df: DataFrame, limit: int | None = None) -> tuple[DataFrame
     the rest of the DAG, and an eager collect just serializes an extra
     ~0.2-0.3 s job at compose time (the first r15 attempt collected the
     in-query IVF centroids too and the interleaved pinned-ref A/B read
-    it 0.76-0.87x — reverted). ``limit`` bounds the pull, but
-    limit+collect executes CollectLimit's INCREMENTAL job ladder (1
-    partition, then scale-up) — several sequential jobs — so only pass
-    it when the caller cannot bound the frame any other way."""
-    spark = df.sparkSession
-    src = df.limit(limit) if limit is not None else df
-    rows = src.collect()
-    return F.broadcast(local_frame(spark, rows, df.schema)), rows
+    it 0.76-0.87x — reverted). Callers pass frames bounded by
+    construction: a ``limit`` would run CollectLimit's INCREMENTAL job
+    ladder (1 partition, then scale-up) — several sequential jobs."""
+    rows = df.collect()
+    return F.broadcast(local_frame(df.sparkSession, rows, df.schema)), rows
 
 
 def _local_centroids(centroids: DataFrame, dim: int) -> DataFrame:
@@ -1216,7 +1199,6 @@ def ivf_pq_topk(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     query_id_col: str = "query_id",
-    small_queries: bool = True,
     corpus_count: int | None = None,
     centroids: DataFrame | None = None,
     auto_rekey: bool = False,
@@ -1262,13 +1244,10 @@ def ivf_pq_topk(
             ivf_pq_topk, corpus, queries, id_col, vec_col, query_id_col,
             dict(k=k, m_cand=m_cand, stride=stride, nprobe=nprobe,
                  n_sub=n_sub, n_codes=n_codes, dim=dim,
-                 small_queries=small_queries, corpus_count=corpus_count,
-                 centroids=centroids),
+                 corpus_count=corpus_count, centroids=centroids),
         )
     cents = _ivf_centroids(corpus, centroids, stride, dim, id_col, vec_col)
-    probes = _probe_cells(
-        queries, cents, nprobe, small_queries, query_id_col, vec_col, dim
-    )
+    probes = _probe_cells(queries, cents, nprobe, query_id_col, vec_col, dim)
     cents_b = _pq_codebooks(
         corpus, n_codes, n_sub, dim, id_col, vec_col, n=corpus_count
     )

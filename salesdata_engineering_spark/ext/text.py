@@ -49,6 +49,69 @@ def _ratio_in(toks: Column, words: tuple[str, ...]) -> Column:
     return hits / F.greatest(F.size(toks), F.lit(1))
 
 
+def _mean_token_len(t: Column) -> Column:
+    """Mean length of the tokens in ``t`` (0 for an empty array)."""
+    return F.aggregate(F.transform(t, F.length), F.lit(0), lambda a, x: a + x) / F.greatest(
+        F.size(t), F.lit(1)
+    )
+
+
+def _token_cols(text_col: str) -> dict[str, Column]:
+    """token_stats' columns by output name: whitespace token count,
+    unique tokens, mean token length and BPE-ish sub-token pieces."""
+    t = tokens(text_col)
+    pieces = F.split(F.regexp_replace(F.col(text_col), r"([^\sA-Za-z0-9]|[0-9]+)", r" $1 "), r"\s+")
+    pieces = F.filter(pieces, lambda p: p != F.lit(""))
+    return {
+        "n_tokens": F.size(t),
+        "n_unique_tokens": F.size(F.array_distinct(t)),
+        "avg_token_len": F.round(_mean_token_len(t), 6),
+        "n_subword_pieces": F.size(pieces),
+    }
+
+
+def _lang_cols(text_col: str) -> dict[str, Column]:
+    """lang_id's columns by output name: ``ratio_<lang>`` per language,
+    then ``lang_pred``."""
+    t = tokens(text_col)
+    ratios = {lang: F.round(_ratio_in(t, words), 6) for lang, words in LANG_STOPWORDS.items()}
+    best = F.greatest(*ratios.values())
+    pred = F.lit("und")
+    for lang in sorted(LANG_STOPWORDS, reverse=True):
+        pred = F.when((best >= 0.02) & (ratios[lang] == best), lang).otherwise(pred)
+    return {**{f"ratio_{lang}": r for lang, r in ratios.items()}, "lang_pred": pred}
+
+
+def _quality_cols(text_col: str) -> dict[str, Column]:
+    """quality_score's columns after ``n_tokens``, by output name; the
+    last, ``quality``, is the score itself."""
+    t = tokens(text_col)
+    punct_ratio = (
+        F.length(F.regexp_replace(F.col(text_col), r"[A-Za-z0-9\s]", ""))
+        / F.greatest(F.length(text_col), F.lit(1))
+    )
+    stop_ratio = _ratio_in(t, LANG_STOPWORDS["en"])
+    mean_len = _mean_token_len(t)
+    len_ok = F.when((mean_len >= 3) & (mean_len <= 8), F.lit(1.0)).otherwise(F.lit(0.0))
+    score = (
+        F.lit(0.4) * F.least(F.size(t) / F.lit(50.0), F.lit(1.0))
+        + F.lit(0.3) * (F.lit(1.0) - punct_ratio)
+        + F.lit(0.2) * F.least(stop_ratio / F.lit(0.1), F.lit(1.0))
+        + F.lit(0.1) * len_ok
+    )
+    return {
+        "punct_ratio": F.round(punct_ratio, 6),
+        "stopword_ratio": F.round(stop_ratio, 6),
+        "mean_token_len": F.round(mean_len, 6),
+        "quality": F.round(score, 6),
+    }
+
+
+def _named(cols: dict[str, Column]) -> list[Column]:
+    """Columns keyed by output name, each aliased to that name."""
+    return [c.alias(name) for name, c in cols.items()]
+
+
 def token_stats(df: DataFrame, text_col: str = "text", id_col: str = "doc_id") -> DataFrame:
     """Per-document token counts: total, unique, average token length.
 
@@ -57,20 +120,7 @@ def token_stats(df: DataFrame, text_col: str = "text", id_col: str = "doc_id") -
     pre-tokenizer regex), approximating LLM token counts without a
     vocab file.
     """
-    t = tokens(text_col)
-    pieces = F.split(F.regexp_replace(F.col(text_col), r"([^\sA-Za-z0-9]|[0-9]+)", r" $1 "), r"\s+")
-    pieces = F.filter(pieces, lambda p: p != F.lit(""))
-    return df.select(
-        id_col,
-        F.size(t).alias("n_tokens"),
-        F.size(F.array_distinct(t)).alias("n_unique_tokens"),
-        F.round(
-            F.aggregate(F.transform(t, F.length), F.lit(0), lambda acc, x: acc + x)
-            / F.greatest(F.size(t), F.lit(1)),
-            6,
-        ).alias("avg_token_len"),
-        F.size(pieces).alias("n_subword_pieces"),
-    )
+    return df.select(id_col, *_named(_token_cols(text_col)))
 
 
 def lang_id(df: DataFrame, text_col: str = "text", id_col: str = "doc_id") -> DataFrame:
@@ -80,17 +130,7 @@ def lang_id(df: DataFrame, text_col: str = "text", id_col: str = "doc_id") -> Da
     predicts the argmax if its ratio ≥ 0.02, else 'und' (undetermined).
     Ties break by language code order (deterministic). Structured as a
     single codegen'd expression — no shuffle."""
-    t = tokens(text_col)
-    ratios = {lang: F.round(_ratio_in(t, words), 6) for lang, words in LANG_STOPWORDS.items()}
-    best = F.greatest(*ratios.values())
-    pred = F.lit("und")
-    for lang in sorted(LANG_STOPWORDS, reverse=True):
-        pred = F.when((best >= 0.02) & (ratios[lang] == best), lang).otherwise(pred)
-    return df.select(
-        id_col,
-        *[r.alias(f"ratio_{lang}") for lang, r in ratios.items()],
-        pred.alias("lang_pred"),
-    )
+    return df.select(id_col, *_named(_lang_cols(text_col)))
 
 
 def quality_expr(text_col: str = "text") -> Column:
@@ -100,22 +140,7 @@ def quality_expr(text_col: str = "text") -> Column:
     projection (one scan) instead of joining ``quality_score``'s frame
     back on the id — a pure-projection self-join Catalyst won't collapse.
     """
-    t = tokens(text_col)
-    n_tok = F.greatest(F.size(t), F.lit(1))
-    punct_ratio = (
-        F.length(F.regexp_replace(F.col(text_col), r"[A-Za-z0-9\s]", ""))
-        / F.greatest(F.length(text_col), F.lit(1))
-    )
-    stop_ratio = _ratio_in(t, LANG_STOPWORDS["en"])
-    mean_len = F.aggregate(F.transform(t, F.length), F.lit(0), lambda a, x: a + x) / n_tok
-    len_ok = F.when((mean_len >= 3) & (mean_len <= 8), F.lit(1.0)).otherwise(F.lit(0.0))
-    return F.round(
-        F.lit(0.4) * F.least(F.size(t) / F.lit(50.0), F.lit(1.0))
-        + F.lit(0.3) * (F.lit(1.0) - punct_ratio)
-        + F.lit(0.2) * F.least(stop_ratio / F.lit(0.1), F.lit(1.0))
-        + F.lit(0.1) * len_ok,
-        6,
-    )
+    return _quality_cols(text_col)["quality"]
 
 
 def quality_score(df: DataFrame, text_col: str = "text", id_col: str = "doc_id") -> DataFrame:
@@ -126,28 +151,10 @@ def quality_score(df: DataFrame, text_col: str = "text", id_col: str = "doc_id")
           + 0.2·min(stop_ratio/0.1, 1) + 0.1·len_ok
     (len_ok: mean token length in the natural-language 3..8 band).
     """
-    t = tokens(text_col)
-    n_tok = F.greatest(F.size(t), F.lit(1))
-    punct_ratio = (
-        F.length(F.regexp_replace(F.col(text_col), r"[A-Za-z0-9\s]", ""))
-        / F.greatest(F.length(text_col), F.lit(1))
-    )
-    stop_ratio = _ratio_in(t, LANG_STOPWORDS["en"])
-    mean_len = F.aggregate(F.transform(t, F.length), F.lit(0), lambda a, x: a + x) / n_tok
-    len_ok = F.when((mean_len >= 3) & (mean_len <= 8), F.lit(1.0)).otherwise(F.lit(0.0))
-    score = (
-        F.lit(0.4) * F.least(F.size(t) / F.lit(50.0), F.lit(1.0))
-        + F.lit(0.3) * (F.lit(1.0) - punct_ratio)
-        + F.lit(0.2) * F.least(stop_ratio / F.lit(0.1), F.lit(1.0))
-        + F.lit(0.1) * len_ok
-    )
     return df.select(
         id_col,
-        F.size(t).alias("n_tokens"),
-        F.round(punct_ratio, 6).alias("punct_ratio"),
-        F.round(stop_ratio, 6).alias("stopword_ratio"),
-        F.round(mean_len, 6).alias("mean_token_len"),
-        F.round(score, 6).alias("quality"),
+        F.size(tokens(text_col)).alias("n_tokens"),
+        *_named(_quality_cols(text_col)),
     )
 
 
@@ -160,41 +167,11 @@ def text_profile(df: DataFrame, text_col: str = "text", id_col: str = "doc_id") 
     three scans, or a join if combined naively). Column semantics are
     identical to the individual operators.
     """
-    t = tokens(text_col)
-    pieces = F.split(F.regexp_replace(F.col(text_col), r"([^\sA-Za-z0-9]|[0-9]+)", r" $1 "), r"\s+")
-    pieces = F.filter(pieces, lambda p: p != F.lit(""))
-    n_tok = F.greatest(F.size(t), F.lit(1))
-    tok_len_sum = F.aggregate(F.transform(t, F.length), F.lit(0), lambda a, x: a + x)
-    ratios = {lang: F.round(_ratio_in(t, words), 6) for lang, words in LANG_STOPWORDS.items()}
-    best = F.greatest(*ratios.values())
-    pred = F.lit("und")
-    for lang in sorted(LANG_STOPWORDS, reverse=True):
-        pred = F.when((best >= 0.02) & (ratios[lang] == best), lang).otherwise(pred)
-    punct_ratio = (
-        F.length(F.regexp_replace(F.col(text_col), r"[A-Za-z0-9\s]", ""))
-        / F.greatest(F.length(text_col), F.lit(1))
-    )
-    stop_ratio = _ratio_in(t, LANG_STOPWORDS["en"])
-    mean_len = tok_len_sum / n_tok
-    len_ok = F.when((mean_len >= 3) & (mean_len <= 8), F.lit(1.0)).otherwise(F.lit(0.0))
-    score = (
-        F.lit(0.4) * F.least(F.size(t) / F.lit(50.0), F.lit(1.0))
-        + F.lit(0.3) * (F.lit(1.0) - punct_ratio)
-        + F.lit(0.2) * F.least(stop_ratio / F.lit(0.1), F.lit(1.0))
-        + F.lit(0.1) * len_ok
-    )
     return df.select(
         id_col,
-        F.size(t).alias("n_tokens"),
-        F.size(F.array_distinct(t)).alias("n_unique_tokens"),
-        F.round(tok_len_sum / n_tok, 6).alias("avg_token_len"),
-        F.size(pieces).alias("n_subword_pieces"),
-        *[r.alias(f"ratio_{lang}") for lang, r in ratios.items()],
-        pred.alias("lang_pred"),
-        F.round(punct_ratio, 6).alias("punct_ratio"),
-        F.round(stop_ratio, 6).alias("stopword_ratio"),
-        F.round(mean_len, 6).alias("mean_token_len"),
-        F.round(score, 6).alias("quality"),
+        *_named(_token_cols(text_col)),
+        *_named(_lang_cols(text_col)),
+        *_named(_quality_cols(text_col)),
     )
 
 

@@ -77,7 +77,6 @@ def sales_team_mart(sales: DataFrame) -> DataFrame:
         keys=["store_id", "sales_month"],
         order=F.col("total_sales").desc(),
         alias="rnk",
-        method="rank",
     )
     return ranked_df.select(
         "store_id",

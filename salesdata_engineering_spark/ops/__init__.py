@@ -1,8 +1,12 @@
-"""Operator library — one module per SURVEY §2 category.
+"""Operator library — one module per operator that the DataFrame API
+does not already provide as a single call.
 
 Every operator is a pure ``DataFrame -> DataFrame`` (or Column) function:
 no hidden session state, no actions, fully lazy so Catalyst sees the whole
 plan and can push filters/prune columns across operator boundaries.
+Projections, filters, joins, set operations, ``distinct``, ``rollup``,
+``cube`` and global top-k (``orderBy().limit()``) are DataFrame calls
+used directly by the query functions (see ``registry.py``).
 """
 
-from . import aggregations, joins, projections, setops, sorts, windows  # noqa: F401
+from . import aggregations, sorts, windows  # noqa: F401

@@ -1,4 +1,4 @@
-"""Aggregations (SURVEY §2.4, A1-A4 + the full groupBy surface).
+"""Group totals (SURVEY §2.4, A1-A2).
 
 The reference computes every group total as a *window sum over the group
 keys followed by distinct* (`customer_mart_sql_tranform_write.py:10-19`,
@@ -7,7 +7,8 @@ and then hash-aggregates all columns to dedup. The engine's canonical
 form is ``groupBy().agg()`` (partial + final hash aggregate, map-side
 combine, ~columns-needed-only shuffle). ``window_sum_distinct`` keeps the
 reference shape available and tests prove the two produce identical
-results.
+results. The rest of the groupBy surface (``agg``, ``distinct``,
+``rollup``, ``cube``) is the DataFrame API itself, called directly.
 """
 
 from __future__ import annotations
@@ -23,16 +24,10 @@ def grouped_sum(
     keys: Sequence[str],
     value: str | Column,
     alias: str = "total",
-    keep: Sequence[str] = (),
 ) -> DataFrame:
     """A1/A2 as the engine computes them: hash aggregate on the group
-    keys. ``keep`` carries functionally-dependent attributes (e.g. the
-    customer's name) through via ``max`` — cheaper than the reference's
-    full-row distinct and equivalent when the attrs are determined by the
     keys."""
-    aggs = [F.sum(value).alias(alias)]
-    aggs += [F.max(k).alias(k) for k in keep]
-    return df.groupBy(*keys).agg(*aggs)
+    return df.groupBy(*keys).agg(F.sum(value).alias(alias))
 
 
 def window_sum_distinct(
@@ -40,7 +35,6 @@ def window_sum_distinct(
     keys: Sequence[str],
     value: str | Column,
     alias: str = "total",
-    keep: Sequence[str] = (),
 ) -> DataFrame:
     """A1/A2 in the *reference's* shape: unbounded window sum partitioned
     by the keys, project, then ``.distinct()`` to collapse to one row per
@@ -49,28 +43,7 @@ def window_sum_distinct(
     w = Window.partitionBy(*keys)
     return (
         df.withColumn(alias, F.sum(value).over(w))
-        .select(*keys, *keep, alias)
+        .select(*keys, alias)
         .distinct()
     )
 
-
-def summarize(df: DataFrame, keys: Sequence[str], **aggs: Column) -> DataFrame:
-    """General groupBy().agg() with pre-aliased expressions."""
-    return df.groupBy(*keys).agg(*[c.alias(n) for n, c in aggs.items()])
-
-
-def dedup(df: DataFrame, subset: Sequence[str] | None = None) -> DataFrame:
-    """A3 — ``distinct()`` / ``dropDuplicates(subset)``. At scale this is
-    a hash aggregate on the subset columns; prefer a narrow subset over
-    whole-row distinct."""
-    return df.distinct() if subset is None else df.dropDuplicates(list(subset))
-
-
-def rollup_agg(df: DataFrame, keys: Sequence[str], **aggs: Column) -> DataFrame:
-    """ROLLUP over keys (absent in the reference; engine extension)."""
-    return df.rollup(*keys).agg(*[c.alias(n) for n, c in aggs.items()])
-
-
-def cube_agg(df: DataFrame, keys: Sequence[str], **aggs: Column) -> DataFrame:
-    """CUBE over keys (absent in the reference; engine extension)."""
-    return df.cube(*keys).agg(*[c.alias(n) for n, c in aggs.items()])

@@ -35,6 +35,25 @@ def _nn_keys(df: DataFrame, keys: Sequence[str]) -> DataFrame:
     return df.filter(reduce(lambda a, b: a & b, [F.col(k).isNotNull() for k in keys]))
 
 
+def _dedup_right(
+    right: DataFrame,
+    keys: Sequence[str],
+    ts: str,
+    payload: Sequence[str],
+    tiebreak: str,
+) -> DataFrame:
+    """The deterministic right side both as-of joins scan: NULL-key rows
+    dropped (:func:`_nn_keys`), then one row per (keys, ts), the max
+    ``tiebreak`` winning, projected to (keys, ts, payload)."""
+    w_dedup = Window.partitionBy(*keys, ts).orderBy(F.col(tiebreak).desc())
+    return (
+        _nn_keys(right, keys)
+        .withColumn("_rn", F.row_number().over(w_dedup))
+        .filter(F.col("_rn") == 1)
+        .select(*keys, ts, *payload)
+    )
+
+
 def _match_struct_type(right: DataFrame, ts: str, payload: Sequence[str]):
     """StructType of the carried match: (_m_ts, _m_<payload>...) —
     the left side's typed NULL literal for the union."""
@@ -69,14 +88,7 @@ def asof_join(
     group NULL keys together and silently match NULL-key lefts to
     NULL-key rights, a pairing no SQL join produces.
     """
-    # deterministic right side: one row per (keys, ts), max-tiebreak wins
-    w_dedup = Window.partitionBy(*keys, ts).orderBy(F.col(tiebreak).desc())
-    r = (
-        _nn_keys(right, keys)
-        .withColumn("_rn", F.row_number().over(w_dedup))
-        .filter(F.col("_rn") == 1)
-        .select(*keys, ts, *payload)
-    )
+    r = _dedup_right(right, keys, ts, payload, tiebreak)
 
     left_cols = left.columns
     # The matched row travels as ONE struct per right row — never as
@@ -152,13 +164,7 @@ def asof_nearest_join(
     the row stream stays O(|L|+|R|). Distances compare as exact
     integer microseconds. NULL join keys never match (same right-side
     filter as :func:`asof_join` — SQL equality semantics)."""
-    w_dedup = Window.partitionBy(*keys, ts).orderBy(F.col(tiebreak).desc())
-    r = (
-        _nn_keys(right, keys)
-        .withColumn("_rn", F.row_number().over(w_dedup))
-        .filter(F.col("_rn") == 1)
-        .select(*keys, ts, *payload)
-    )
+    r = _dedup_right(right, keys, ts, payload, tiebreak)
     left_cols = left.columns
     matched = [f"{ts}{suffix}"] + [f"{p}{suffix}" for p in payload]
     # same single-struct carry as asof_join (see comment there): the

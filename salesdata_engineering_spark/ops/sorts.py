@@ -1,25 +1,17 @@
-"""Sorts / limits / top-k (SURVEY §2.6).
+"""Global total-order numbering, running sums, ntiles and dense
+re-keying (SURVEY §2.6).
 
 Scale note: ``orderBy`` is a global range-partitioned sort — fine for
 final small outputs, wrong for intermediate 100 TB frames. ``limit``
 after ``orderBy`` is optimized by Spark into TakeOrderedAndProject (a
 per-partition top-k + driver merge, no full sort) — that's the idiom for
-global top-k.
+global top-k, called directly on the DataFrame.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
-
-
-def limit(df: DataFrame, n: int) -> DataFrame:
-    return df.limit(n)
-
-
-def top_k_global(df: DataFrame, order: Column | str, k: int) -> DataFrame:
-    """Global top-k → TakeOrderedAndProject physical op."""
-    return df.orderBy(order).limit(k)
 
 
 def _order_cols(
@@ -46,6 +38,28 @@ def _order_cols(
         c.desc_nulls_last() if d == "desc" else c.asc_nulls_last()
         for c, d in zip(cols, directions)
     ]
+
+
+def _ranged(
+    df: DataFrame, cols: list[Column], n_parts: int | None, persist_key: str
+):
+    """The first pass shared by the two-pass helpers: ``df``
+    range-partitioned into ``n_parts`` (default: the session's
+    ``defaultParallelism``) by ``cols``, sorted within each partition
+    and tagged with its ``_pid``, swap-persisted under ``persist_key``;
+    plus ``w_off``, the window over every EARLIER partition that turns
+    per-partition totals into offsets."""
+    from ..ext.caching import swap_persist
+
+    parts = n_parts or df.sparkSession.sparkContext.defaultParallelism
+    ranged = swap_persist(
+        persist_key,
+        df.repartitionByRange(parts, *cols)
+        .sortWithinPartitions(*cols)
+        .withColumn("_pid", F.spark_partition_id()),
+    )
+    w_off = Window.orderBy("_pid").rowsBetween(Window.unboundedPreceding, -1)
+    return ranged, w_off
 
 
 def global_row_number(
@@ -89,20 +103,9 @@ def global_row_number(
     one data-sized cache entry per invocation for the session's
     lifetime. Cost: one range exchange + one tiny aggregate — the same
     price as ``orderBy``, and every stage is 100 TB-parallel."""
-    from pyspark.sql import Window
-
-    from ..ext.caching import swap_persist
-
     cols = _order_cols(order, directions)
-    parts = n_parts or df.sparkSession.sparkContext.defaultParallelism
-    ranged = swap_persist(
-        persist_key,
-        df.repartitionByRange(parts, *cols)
-        .sortWithinPartitions(*cols)
-        .withColumn("_pid", F.spark_partition_id()),
-    )
+    ranged, w_off = _ranged(df, cols, n_parts, persist_key)
     counts = ranged.groupBy("_pid").count()
-    w_off = Window.orderBy("_pid").rowsBetween(Window.unboundedPreceding, -1)
     offsets = counts.withColumn(
         "_off", F.coalesce(F.sum("count").over(w_off), F.lit(0))
     ).select("_pid", "_off")
@@ -153,22 +156,11 @@ def global_cumsum_multi(
     two parallel ECDF cumulations over the same value histogram —
     calling :func:`global_cumsum` per column would range-shuffle the
     histogram once per statistic."""
-    from pyspark.sql import Window
-
-    from ..ext.caching import swap_persist
-
     cols = _order_cols(order, directions)
-    parts = n_parts or df.sparkSession.sparkContext.defaultParallelism
-    ranged = swap_persist(
-        persist_key,
-        df.repartitionByRange(parts, *cols)
-        .sortWithinPartitions(*cols)
-        .withColumn("_pid", F.spark_partition_id()),
-    )
+    ranged, w_off = _ranged(df, cols, n_parts, persist_key)
     totals = ranged.groupBy("_pid").agg(
         *[F.sum(v).alias(f"_t_{a}") for a, v in values.items()]
     )
-    w_off = Window.orderBy("_pid").rowsBetween(Window.unboundedPreceding, -1)
     offsets = totals.select(
         "_pid",
         *[
@@ -210,20 +202,9 @@ def global_ntile(
     broadcast now carry both (measured: 3 fewer jobs per call; the
     three-quintile RFM query runs one driver-blocking job per ntile
     instead of three)."""
-    from pyspark.sql import Window
-
-    from ..ext.caching import swap_persist
-
     cols = _order_cols(order, directions)
-    parts = df.sparkSession.sparkContext.defaultParallelism
-    ranged = swap_persist(
-        persist_key,
-        df.repartitionByRange(parts, *cols)
-        .sortWithinPartitions(*cols)
-        .withColumn("_pid", F.spark_partition_id()),
-    )
+    ranged, w_off = _ranged(df, cols, None, persist_key)
     counts = ranged.groupBy("_pid").count()
-    w_off = Window.orderBy("_pid").rowsBetween(Window.unboundedPreceding, -1)
     w_tot = Window.orderBy("_pid").rowsBetween(
         Window.unboundedPreceding, Window.unboundedFollowing
     )

@@ -35,23 +35,10 @@ def ranked(
     keys: Sequence[str],
     order: Column | str,
     alias: str = "rank",
-    method: str = "rank",
 ) -> DataFrame:
-    """W3 — rank/dense_rank/row_number within (keys) by order."""
-    fn = {"rank": F.rank, "dense_rank": F.dense_rank, "row_number": F.row_number}[method]
+    """W3 — ``rank()`` within (keys) by order: tied rows share a rank."""
     w = Window.partitionBy(*keys).orderBy(order)
-    return df.withColumn(alias, fn().over(w))
-
-
-def top_k_per_group(
-    df: DataFrame, keys: Sequence[str], order: Column | str, k: int, exact_ties: bool = True
-) -> DataFrame:
-    """O2 engine extension — true top-k per group. ``exact_ties=True``
-    uses rank (ties all kept, reference semantics); False uses row_number
-    (exactly k rows). Scale note: this is the standard shuffle-on-keys +
-    per-partition sort; no global sort."""
-    method = "rank" if exact_ties else "row_number"
-    return ranked(df, keys, order, "_rk", method).filter(F.col("_rk") <= k).drop("_rk")
+    return df.withColumn(alias, F.rank().over(w))
 
 
 def lag_lead(

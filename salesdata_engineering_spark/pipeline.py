@@ -14,6 +14,7 @@ is what a multi-job deployment should do.
 
 from __future__ import annotations
 
+from concurrent.futures import ThreadPoolExecutor
 from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession
@@ -36,15 +37,12 @@ def run_full_pipeline(
     spark: SparkSession,
     sf_dir: str,
     out_dir: str,
-    persist: bool = True,
 ) -> PipelineResult:
     """scan → enrich (star joins) → persist ONCE → both marts →
     partitioned parquet marts. One execution of the join pipeline total
     (the reference runs it ≥6 times)."""
     tables = load_tables(spark, sf_dir)
-    sales = canonical_sales(tables)
-    if persist:
-        sales = sales.persist(StorageLevel.MEMORY_AND_DISK)
+    sales = canonical_sales(tables).persist(StorageLevel.MEMORY_AND_DISK)
     try:
         cust_dim = tables["customer"].select(
             F.col("c_custkey").cast("int").alias("customer_id"),
@@ -73,29 +71,20 @@ def run_full_pipeline(
             )
             return spark.read.parquet(f"{out_dir}/sales_team_data_mart").count()
 
-        if persist:
-            # Materialize the shared fact ONCE, then run the two
-            # independent mart chains (write + count-back) CONCURRENTLY:
-            # the scheduler back-fills each partitioned write's straggler
-            # tail with the other chain's tasks instead of leaving the
-            # cluster idle between sequential actions. The up-front count
-            # exists because two concurrently-launched cold jobs would
-            # each compute the join pipeline before the cache fills; on
-            # the persisted frame it is one pass that the first mart
-            # aggregate previously paid anyway. (persist=False keeps the
-            # sequential shape: without the shared cache, concurrent
-            # chains would recompute the fact twice.)
-            sales.count()
-            from concurrent.futures import ThreadPoolExecutor
-
-            with ThreadPoolExecutor(max_workers=2) as pool:
-                c_fut = pool.submit(_cust_chain)
-                s_fut = pool.submit(_sales_chain)
-                c_rows, s_rows = c_fut.result(), s_fut.result()
-        else:
-            c_rows, s_rows = _cust_chain(), _sales_chain()
+        # Materialize the shared fact ONCE, then run the two independent
+        # mart chains (write + count-back) CONCURRENTLY: the scheduler
+        # back-fills each partitioned write's straggler tail with the
+        # other chain's tasks instead of leaving the cluster idle between
+        # sequential actions. The up-front count exists because two
+        # concurrently-launched cold jobs would each compute the join
+        # pipeline before the cache fills; on the persisted frame it is
+        # one pass that the first mart aggregate previously paid anyway.
+        sales.count()
+        with ThreadPoolExecutor(max_workers=2) as pool:
+            c_fut = pool.submit(_cust_chain)
+            s_fut = pool.submit(_sales_chain)
+            c_rows, s_rows = c_fut.result(), s_fut.result()
         return PipelineResult(c_rows, s_rows, out_dir)
     finally:
         spark.sparkContext.setJobDescription(None)
-        if persist:
-            sales.unpersist()
+        sales.unpersist()

@@ -39,12 +39,7 @@ from pyspark.sql import types as T
 from .datasets import CANONICAL_SALES_SQL, canonical_sales, load_tables
 from .functions import month_key
 from .marts import customer_monthly_spend, sales_team_mart
-from .ops.aggregations import cube_agg, dedup, rollup_agg, summarize
-from .ops.joins import anti_join, semi_join
-from .ops.projections import where, where_between
-from .ops.setops import except_, intersect, union_distinct
-from .ops.sorts import top_k_global
-from .ops.windows import asc_nulls_last, lag_lead, ranked, running_total, top_k_per_group
+from .ops.windows import asc_nulls_last, lag_lead, ranked, running_total
 
 PRICE = T.DecimalType(12, 2)  # fits any testdata price/quantity exactly
 RATE = T.DecimalType(4, 2)  # fits discount/tax in [0,1) exactly
@@ -178,21 +173,19 @@ def q_customer_mart(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def q_pricing_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
     li = load_tables(spark, sf_dir)["lineitem"]
-    li = where(li, F.col("l_shipdate") <= F.lit("1998-09-02").cast("timestamp"))
+    li = li.filter(F.col("l_shipdate") <= F.lit("1998-09-02").cast("timestamp"))
     disc_price = _dec("l_extendedprice") * (F.lit(1).cast(RATE) - _dec("l_discount", RATE))
     charge = disc_price * (F.lit(1).cast(RATE) + _dec("l_tax", RATE))
-    return summarize(
-        li,
-        ["l_returnflag", "l_linestatus"],
-        sum_qty=_money_out(F.sum(_dec("l_quantity"))),
-        sum_base_price=_money_out(F.sum(_dec("l_extendedprice"))),
-        sum_disc_price=_money_out(F.sum(disc_price)),
-        sum_charge=_money_out(F.sum(charge)),
-        avg_qty=F.round(F.sum(_dec("l_quantity")).cast("double") / F.count("*"), 6),
-        avg_disc=F.round(F.sum(_dec("l_discount", RATE)).cast("double") / F.count("*"), 6),
-        count_order=F.count("*"),
-        min_qty=F.min("l_quantity"),
-        max_qty=F.max("l_quantity"),
+    return li.groupBy("l_returnflag", "l_linestatus").agg(
+        _money_out(F.sum(_dec("l_quantity"))).alias("sum_qty"),
+        _money_out(F.sum(_dec("l_extendedprice"))).alias("sum_base_price"),
+        _money_out(F.sum(disc_price)).alias("sum_disc_price"),
+        _money_out(F.sum(charge)).alias("sum_charge"),
+        F.round(F.sum(_dec("l_quantity")).cast("double") / F.count("*"), 6).alias("avg_qty"),
+        F.round(F.sum(_dec("l_discount", RATE)).cast("double") / F.count("*"), 6).alias("avg_disc"),
+        F.count("*").alias("count_order"),
+        F.min("l_quantity").alias("min_qty"),
+        F.max("l_quantity").alias("max_qty"),
     )
 
 
@@ -212,13 +205,11 @@ def q_pricing_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def q_filter_range_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     li = load_tables(spark, sf_dir)["lineitem"]
-    li = where(
-        li,
+    li = li.filter(
         (F.col("l_shipdate") >= F.lit("1996-01-01").cast("timestamp"))
         & (F.col("l_shipdate") < F.lit("1997-01-01").cast("timestamp"))
-        & (F.col("l_quantity") < 25),
-    )
-    li = where_between(li, "l_discount", 0.04, 0.07)
+        & (F.col("l_quantity") < 25)
+    ).filter(F.col("l_discount").between(0.04, 0.07))
     return li.agg(
         _money_out(F.sum(_dec("l_extendedprice") * _dec("l_discount", RATE))).alias("revenue"),
         F.count("*").alias("n_rows"),
@@ -232,7 +223,7 @@ def q_filter_range_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     "customer_mart_sql_tranform_write.py:19; SELECT DISTINCT main.py:40-41).",
 )
 def q_distinct_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return dedup(load_tables(spark, sf_dir)["lineitem"].select("l_returnflag", "l_linestatus"))
+    return load_tables(spark, sf_dir)["lineitem"].select("l_returnflag", "l_linestatus").distinct()
 
 
 @register(
@@ -247,11 +238,9 @@ def q_distinct_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def q_rollup_qty(spark: SparkSession, sf_dir: str) -> DataFrame:
     li = load_tables(spark, sf_dir)["lineitem"]
-    return rollup_agg(
-        li,
-        ["l_returnflag", "l_linestatus"],
-        sum_qty=F.sum(_dec("l_quantity")).cast("double"),
-        n=F.count("*"),
+    return li.rollup("l_returnflag", "l_linestatus").agg(
+        F.sum(_dec("l_quantity")).cast("double").alias("sum_qty"),
+        F.count("*").alias("n"),
     )
 
 
@@ -267,11 +256,9 @@ def q_rollup_qty(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def q_cube_qty(spark: SparkSession, sf_dir: str) -> DataFrame:
     li = load_tables(spark, sf_dir)["lineitem"]
-    return cube_agg(
-        li,
-        ["l_returnflag", "l_linestatus"],
-        sum_qty=F.sum(_dec("l_quantity")).cast("double"),
-        n=F.count("*"),
+    return li.cube("l_returnflag", "l_linestatus").agg(
+        F.sum(_dec("l_quantity")).cast("double").alias("sum_qty"),
+        F.count("*").alias("n"),
     )
 
 
@@ -300,11 +287,13 @@ def q_join_star_enrich(spark: SparkSession, sf_dir: str) -> DataFrame:
     joined = cust.join(
         F.broadcast(nation), cust.c_nationkey == nation.n_nationkey, "inner"
     ).join(F.broadcast(region), nation.n_regionkey == region.r_regionkey, "inner")
-    return summarize(
-        joined.select(F.col("n_name").alias("nation"), F.col("r_name").alias("region"), "c_acctbal"),
-        ["nation", "region"],
-        n_customers=F.count("*"),
-        sum_acctbal=_money_out(F.sum(_dec("c_acctbal"))),
+    return (
+        joined.select(F.col("n_name").alias("nation"), F.col("r_name").alias("region"), "c_acctbal")
+        .groupBy("nation", "region")
+        .agg(
+            F.count("*").alias("n_customers"),
+            _money_out(F.sum(_dec("c_acctbal"))).alias("sum_acctbal"),
+        )
     )
 
 
@@ -320,7 +309,7 @@ def q_join_star_enrich(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_join_semi(spark: SparkSession, sf_dir: str) -> DataFrame:
     t = load_tables(spark, sf_dir)
     orders = t["orders"].select(F.col("o_custkey").alias("c_custkey"))
-    return semi_join(t["customer"].select("c_custkey", "c_name"), orders, "c_custkey")
+    return t["customer"].select("c_custkey", "c_name").join(orders, "c_custkey", "left_semi")
 
 
 @register(
@@ -334,7 +323,7 @@ def q_join_semi(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_join_anti(spark: SparkSession, sf_dir: str) -> DataFrame:
     t = load_tables(spark, sf_dir)
     orders = t["orders"].select(F.col("o_custkey").alias("c_custkey"))
-    return anti_join(t["customer"].select("c_custkey", "c_name"), orders, "c_custkey")
+    return t["customer"].select("c_custkey", "c_name").join(orders, "c_custkey", "left_anti")
 
 
 @register(
@@ -379,10 +368,8 @@ def q_join_left_outer(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def q_topk_suppliers(spark: SparkSession, sf_dir: str) -> DataFrame:
     t = load_tables(spark, sf_dir)
-    rev = summarize(
-        t["lineitem"],
-        ["l_suppkey"],
-        revenue=_money_out(F.sum(_dec("l_extendedprice") * (F.lit(1).cast(RATE) - _dec("l_discount", RATE)))),
+    rev = t["lineitem"].groupBy("l_suppkey").agg(
+        _money_out(F.sum(_dec("l_extendedprice") * (F.lit(1).cast(RATE) - _dec("l_discount", RATE)))).alias("revenue")
     )
     joined = rev.join(F.broadcast(t["supplier"]), rev.l_suppkey == t["supplier"].s_suppkey)
     out = ranked(
@@ -457,7 +444,7 @@ def q_window_lag_lead(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def q_global_topk_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
     o = load_tables(spark, sf_dir)["orders"].select("o_orderkey", "o_totalprice")
-    return top_k_global(o, [F.col("o_totalprice").desc(), F.col("o_orderkey")], 10)
+    return o.orderBy(F.col("o_totalprice").desc(), F.col("o_orderkey")).limit(10)
 
 
 # ---------------------------------------------------------------------------
@@ -484,7 +471,7 @@ def _setop_inputs(spark: SparkSession, sf_dir: str) -> tuple[DataFrame, DataFram
 )
 def q_setop_union(spark: SparkSession, sf_dir: str) -> DataFrame:
     a, b = _setop_inputs(spark, sf_dir)
-    return union_distinct(a, b)
+    return a.unionByName(b).distinct()
 
 
 @register(
@@ -494,7 +481,7 @@ def q_setop_union(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def q_setop_intersect(spark: SparkSession, sf_dir: str) -> DataFrame:
     a, b = _setop_inputs(spark, sf_dir)
-    return intersect(a, b)
+    return a.intersect(b)
 
 
 @register(
@@ -504,7 +491,7 @@ def q_setop_intersect(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def q_setop_except(spark: SparkSession, sf_dir: str) -> DataFrame:
     a, b = _setop_inputs(spark, sf_dir)
-    return except_(a, b)
+    return a.subtract(b)
 
 
 # ---------------------------------------------------------------------------
@@ -557,13 +544,13 @@ def q_scalar_functions(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def q_month_string_equiv(spark: SparkSession, sf_dir: str) -> DataFrame:
     o = load_tables(spark, sf_dir)["orders"]
-    return summarize(
+    return (
         o.select(
             month_key(F.date_format("o_orderdate", "yyyy-MM-dd")).alias("month_str"),
             F.date_format("o_orderdate", "yyyy-MM").alias("month_fmt"),
-        ),
-        ["month_str", "month_fmt"],
-        n_orders=F.count("*"),
+        )
+        .groupBy("month_str", "month_fmt")
+        .agg(F.count("*").alias("n_orders"))
     )
 
 

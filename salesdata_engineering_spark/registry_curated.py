@@ -20,9 +20,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from .datasets import load_tables, register_views
-from .ops.aggregations import cube_agg, rollup_agg
 from .ops.windows import asc_nulls_last
-from .ops.setops import except_, intersect, union_distinct
 from .registry import register
 from .registry_ext import _EN, _GATE_SQL, _LANG_CASE, _LANG_RATIOS, SQL_TOKENS
 
@@ -51,18 +49,18 @@ _GV_PART = """
     + "UNION ALL"
     + _GV_PART.format(tag="gsets", spec="GROUPING SETS ((l_returnflag), (l_linestatus), ())"),
     doc="§2.4 grouping family umbrella: ROLLUP + CUBE + GROUPING SETS over "
-    "the same measure, tagged union. Rollup/cube via the DataFrame API "
-    "(ops/aggregations.py), grouping sets via Spark SQL — each variant "
-    "plans as ONE expand + hash aggregate. Individual variant queries "
-    "remain registered (rollup_qty / cube_qty / grouping_sets_qty).",
+    "the same measure, tagged union. Rollup/cube via the DataFrame API, "
+    "grouping sets via Spark SQL — each variant plans as ONE expand + "
+    "hash aggregate. Individual variant queries remain registered "
+    "(rollup_qty / cube_qty / grouping_sets_qty).",
 )
 def q_agg_grouping_variants(spark: SparkSession, sf_dir: str) -> DataFrame:
     li = load_tables(spark, sf_dir)["lineitem"]
     dec = F.col("l_quantity").cast("decimal(12,2)")
-    aggs = dict(sum_qty=F.sum(dec).cast("double"), n=F.count("*"))
+    aggs = [F.sum(dec).cast("double").alias("sum_qty"), F.count("*").alias("n")]
     keys = ["l_returnflag", "l_linestatus"]
-    r = rollup_agg(li, keys, **aggs).withColumn("variant", F.lit("rollup"))
-    c = cube_agg(li, keys, **aggs).withColumn("variant", F.lit("cube"))
+    r = li.rollup(*keys).agg(*aggs).withColumn("variant", F.lit("rollup"))
+    c = li.cube(*keys).agg(*aggs).withColumn("variant", F.lit("cube"))
     li.createOrReplaceTempView("_curated_gv_li")
     g = spark.sql(
         """
@@ -275,7 +273,7 @@ def _building_open(spark: SparkSession, sf_dir: str) -> tuple[DataFrame, DataFra
 )
 def q_setop_union_compat(spark: SparkSession, sf_dir: str) -> DataFrame:
     building, open_custs = _building_open(spark, sf_dir)
-    u1 = union_distinct(building, open_custs).select(
+    u1 = building.unionByName(open_custs).distinct().select(
         F.lit("distinct").alias("variant"),
         F.col("c_custkey").alias("k"),
         F.lit(None).cast("double").alias("v"),
@@ -313,7 +311,7 @@ def q_setop_union_compat(spark: SparkSession, sf_dir: str) -> DataFrame:
         SELECT o_custkey FROM orders WHERE o_orderpriority = '1-URGENT')
     """,
     doc="§2.7 umbrella: INTERSECT / EXCEPT (distinct) + INTERSECT ALL / "
-    "EXCEPT ALL (multiset), tagged union over the DataFrame API ops. "
+    "EXCEPT ALL (multiset), tagged union over the DataFrame API. "
     "Constituents remain registered.",
 )
 def q_setop_multiset_family(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -324,10 +322,10 @@ def q_setop_multiset_family(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("o_custkey").alias("k")
     )
     parts = [
-        intersect(building, open_custs)
+        building.intersect(open_custs)
         .select(F.col("c_custkey").alias("k"))
         .select(F.lit("intersect").alias("variant"), "k"),
-        except_(building, open_custs)
+        building.subtract(open_custs)
         .select(F.col("c_custkey").alias("k"))
         .select(F.lit("except").alias("variant"), "k"),
         oo.intersectAll(urgent).select(F.lit("intersect_all").alias("variant"), "k"),

@@ -718,7 +718,7 @@ def q_q3_shipping_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(F.round(F.sum(rev), 2).cast("double").alias("revenue"))
     )
     # r14: global top-k as orderBy+limit → TakeOrderedAndProject (the
-    # ops/sorts.py top_k_global idiom — per-partition top-k + driver
+    # DataFrame global top-k idiom — per-partition top-k + driver
     # merge, no Window node at all). The row_number()-over-global-window
     # form it replaces was already bounded by Spark 4's
     # InferWindowGroupLimit (a TakeOrderedAndProject fed the Window),

@@ -182,9 +182,9 @@ def write_stream_parquet(
     path: str,
     checkpoint: str,
     partition_by: tuple[str, ...] = (),
-    available_now: bool = True,
 ):
-    """Durable file sink with checkpoint (the production shape)."""
+    """Durable file sink with checkpoint (the production shape), drained
+    with Trigger.AvailableNow."""
     w = (
         stream_df.writeStream.format("parquet")
         .option("path", path)
@@ -193,32 +193,28 @@ def write_stream_parquet(
     )
     if partition_by:
         w = w.partitionBy(*partition_by)
-    if available_now:
-        w = w.trigger(availableNow=True)
-    return w.start()
+    return w.trigger(availableNow=True).start()
 
 
 def foreach_batch_pipeline(
     stream_df: DataFrame,
     batch_fn: Callable[[DataFrame, int], None],
     checkpoint: str,
-    available_now: bool = True,
     output_mode: str | None = None,
 ):
-    """foreachBatch: reuse a BATCH transform/writer per micro-batch —
-    how the reference's mart writers (parquet + JDBC) slot into a
-    streaming pipeline without a streaming-capable sink. Pass
-    ``output_mode="update"`` when the plan holds an update-mode stateful
-    operator (foreachBatch is also the recovery-capable sink for
-    restart tests — the memory sink cannot resume a checkpoint)."""
+    """foreachBatch: reuse a BATCH transform/writer per micro-batch,
+    drained with Trigger.AvailableNow — how the reference's mart writers
+    (parquet + JDBC) slot into a streaming pipeline without a
+    streaming-capable sink. Pass ``output_mode="update"`` when the plan
+    holds an update-mode stateful operator (foreachBatch is also the
+    recovery-capable sink for restart tests — the memory sink cannot
+    resume a checkpoint)."""
     w = stream_df.writeStream.foreachBatch(batch_fn).option(
         "checkpointLocation", checkpoint
     )
     if output_mode:
         w = w.outputMode(output_mode)
-    if available_now:
-        w = w.trigger(availableNow=True)
-    return w.start()
+    return w.trigger(availableNow=True).start()
 
 
 def run_foreach_batch_upsert(

@@ -22,3 +22,12 @@ def test_normalise_hides_the_upsert_sink_tag():
     b = "Location: InMemoryFileIndex [file:/tmp/upsert_sink_fedcba987654.snap]"
     assert normalise(a) == "Location: InMemoryFileIndex [file:/tmp/upsert_sink_<tag>.snap]"
     assert normalise(b) == normalise(a)
+
+
+def test_normalise_hides_the_zorder_write_dir():
+    """layout_zorder_write writes to a fresh mkdtemp dir per call."""
+    normalise = _dump_plans().normalise
+    a = "Location: InMemoryFileIndex [file:/tmp/zorder_write_uhxbxka6]"
+    b = "Location: InMemoryFileIndex [file:/tmp/zorder_write_2ed4my_5]"
+    assert normalise(a) == "Location: InMemoryFileIndex [file:/tmp/zorder_write_<tag>]"
+    assert normalise(b) == normalise(a)

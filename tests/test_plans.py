@@ -564,6 +564,30 @@ def test_ivf_pq_adc_scan_is_cell_gated(spark, sf_dir):
     assert plan.count("BroadcastNestedLoopJoin") == 2, plan[:1500]
 
 
+def test_ivf_probe_ranking_is_single_partition(spark, sf_dir):
+    """The query-probe ranking (row_number over query_id, ordered by the
+    centroid score ``_cs`` then cid) runs on ONE coalesced partition:
+    ANN query frames are bounded batches, so nothing below that Window
+    may hash-shuffle the (query, cell) pairs on query_id."""
+    lines = plan_of(QUERIES["sim_ivf_pq_topk"].fn(spark, sf_dir)).splitlines()
+    top = next(
+        i for i, ln in enumerate(lines) if "Window [row_number()" in ln and "_cs#" in ln
+    )
+
+    def depth(ln: str) -> int:
+        return len(ln) - len(ln.lstrip(" :+-"))
+
+    below = []
+    for ln in lines[top + 1:]:
+        if depth(ln) <= depth(lines[top]):
+            break
+        below.append(ln)
+    assert any("Coalesce 1" in ln for ln in below), "\n".join(lines[top:top + 12])
+    assert not any(
+        "Exchange hashpartitioning(query_id" in ln for ln in below
+    ), "\n".join(lines[top:top + 12])
+
+
 def test_index_serve_scan_is_partition_pruned(spark, sf_dir):
     """Persisted-index serving must read only the PROBED cells of the
     cid-partitioned posting-list parquet: the codes scan carries a

@@ -59,10 +59,10 @@ def test_shared_helper_selects_through_lazy_imports(sc):
     sel, _ = sc.select_changed_queries("x", diff=[f"{PKG}/ext/dedup.py"])
     mods = _mods_of(sel)
     assert "registry_ext" in mods
-    # ops/sorts.py is imported by registry.py itself, which every
+    # ops/windows.py is imported by registry.py itself, which every
     # registry module imports `register` from -> full selection
     sel_all, _ = sc.select_changed_queries(
-        "x", diff=[f"{PKG}/ops/sorts.py"]
+        "x", diff=[f"{PKG}/ops/windows.py"]
     )
     from salesdata_engineering_spark.registry import QUERIES
 

@@ -16,8 +16,10 @@ normalised away before writing, so two dumps of unchanged code in two
 fresh sessions diff clean and a refactor can be checked plan-identical
 with a plain ``diff``. So is the persisted index's cache key, which
 hashes the build code's source and so differs between any two
-versions of it, and the per-process temp-dir tag of the upsert-sink
-snapshot (``upsert_sink_<tag>.snap``), which hashes the pid.
+versions of it, the per-process temp-dir tag of the upsert-sink
+snapshot (``upsert_sink_<tag>.snap``), which hashes the pid, and the
+random ``mkdtemp`` suffix of the Z-order write target
+(``zorder_write_<tag>``).
 """
 
 from __future__ import annotations
@@ -42,6 +44,7 @@ _NORMALISE = [
     (re.compile(r"at \w+ at [\w.]+:\d+"), ""),
     (re.compile(r"(ivf_pq_(?:app_)?)[0-9a-f]{8}_[0-9a-f]{16}"), r"\1<key>"),
     (re.compile(r"(upsert_sink_)[0-9a-f]{12}"), r"\1<tag>"),
+    (re.compile(r"(zorder_write_)[a-z0-9_]{8}"), r"\1<tag>"),
 ]
 
 
