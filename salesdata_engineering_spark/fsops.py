@@ -19,6 +19,8 @@ module passes plain URI strings and gets back strings, booleans and
 - ``fs_exists`` / ``fs_is_dir`` — existence and directory checks;
 - ``fs_list`` — a directory's direct children as :class:`Entry` records;
 - ``fs_lines`` — a text file's decoded lines, read lazily;
+- ``fs_put`` — a whole small file written from driver bytes, published
+  by one rename;
 - ``fs_delete`` / ``fs_rename`` / ``fs_move`` — the S8 lifecycle moves;
 - ``inventory_fingerprint`` — a content key over a tree's listing;
 - ``staged`` / ``swap_in`` / ``recover_swap`` — crash-safe directory
@@ -44,6 +46,7 @@ from __future__ import annotations
 
 import functools
 import hashlib
+import uuid
 from collections.abc import Iterator
 from typing import NamedTuple
 
@@ -118,6 +121,27 @@ def fs_lines(spark: SparkSession, uri: str) -> Iterator[str]:
             yield raw.encode("latin-1").decode("utf-8", "replace")
     finally:
         stream.close()
+
+
+def fs_put(spark: SparkSession, uri: str, data: bytes) -> None:
+    """Write ``data`` as the file ``uri``, whole or not at all: the bytes
+    go to a hidden sibling ``_tmp-<uuid>`` first, which one rename then
+    publishes at ``uri``. Neither Spark's hidden-file filter nor a
+    ``*.parquet`` glob lists the sibling, so a crash before the rename
+    leaves debris no reader picks up. A refused rename (Hadoop returns
+    false, e.g. when ``uri`` already exists) deletes the sibling and
+    raises ``IOError``. Meant for small driver-built files; bulk data
+    belongs to executor-side writes."""
+    fs, dst = _fs_and_path(spark, uri)
+    tmp = _path_class(spark.sparkContext._jvm)(dst.getParent(), f"_tmp-{uuid.uuid4().hex}")
+    out = fs.create(tmp, False)
+    try:
+        out.write(bytearray(data))
+    finally:
+        out.close()
+    if not fs.rename(tmp, dst):
+        fs.delete(tmp, False)
+        raise IOError(f"publish failed: {uri}")
 
 
 def fs_delete(spark: SparkSession, uri: str, recursive: bool = False) -> bool:

@@ -13,8 +13,8 @@ everything onto an empty seed frame (main.py:183-204).
 Engine re-expression, Spark-first:
 
 - No download step: Spark reads object-store paths directly.
-- The ledger is a parquet table; "which files are new" is one filtered
-  latest-status aggregate over it, not cursor SQL.
+- The ledger is an append-only parquet log; "which files are new" is
+  one filtered scan of it, not cursor SQL.
 - Union is ``unionByName(allowMissingColumns=True)`` over per-header
   frames; the "additional column" fold is kept as an explicit compat
   op (exact name with the space, main.py:195-197).
@@ -26,15 +26,23 @@ FileSystem on the driver (no Spark job). The data scan is one
 multi-path ``spark.read.csv`` per distinct header, typed from the
 header and ``schemas.RAW_SALES_SCHEMA`` — no inference pass — so a
 drop whose files share a header is a single source, and partition
-count follows file splits, not file count. The ledger is read with its
-known schema and filtered to the drop's file names before the latest
-status is resolved, so its driver collect is bounded by the drop, not
-by the ledger's history.
+count follows file splits, not file count.
+
+The ledger's control plane stays off the Spark job path where that is
+safe: a status mark is one parquet part of a few rows, encoded with
+pyarrow on the driver and published by one rename (``fsops.fs_put``),
+so it runs no Spark job. Its reads stay on Spark, where they must
+scale with the log: ``pending`` is one schema-pinned scan filtered to
+the drop's file names, so its collect is bounded by the drop's own
+history, not the ledger's, and the latest status per file is resolved
+in Python from those rows.
 """
 
 from __future__ import annotations
 
 import csv
+import io
+import uuid
 from contextlib import closing
 from dataclasses import dataclass, field
 from pathlib import Path
@@ -43,7 +51,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from .fsops import fs_exists, fs_lines, fs_list, fs_move
+from .fsops import fs_exists, fs_lines, fs_list, fs_move, fs_put
 from .functions import fold_extra_columns
 from .schemas import LEDGER_SCHEMA, RAW_SALES_SCHEMA
 from .session import local_frame
@@ -257,9 +265,11 @@ class FileLedger:
     resources/sql_scripts/table_scripts.sql:1-8 + main.py:39-49,157-174,
     318-334). Status A = in-flight, I = done.
 
-    Append-only log (``schemas.LEDGER_SCHEMA``); current status = the
-    row with the highest seq per file. The log grows with history, so
-    reads that serve one drop filter it to that drop's file names first."""
+    An append-only log (``schemas.LEDGER_SCHEMA``) of one parquet part per
+    status mark; the current status of a file is its row with the highest
+    seq. Marks are written by the driver without Spark (:meth:`record`);
+    reads go through Spark with the schema pinned, and those that serve
+    one drop filter the log to that drop's file names first."""
 
     def __init__(self, spark: SparkSession, path: str):
         self.spark = spark
@@ -281,55 +291,59 @@ class FileLedger:
     def _log(self) -> DataFrame:
         return self.spark.read.schema(LEDGER_SCHEMA).parquet(self.path)
 
-    @staticmethod
-    def _latest(log: DataFrame) -> DataFrame:
-        return log.groupBy("file_name").agg(
-            F.max_by("status", "seq").alias("status"), F.max("seq").alias("seq")
-        )
-
     def snapshot(self) -> DataFrame:
         """Latest status per file (empty frame if no ledger yet)."""
         if not self._exists():
             return local_frame(self.spark, [], LEDGER_SCHEMA)
-        return self._latest(self._log())
+        return self._log().groupBy("file_name").agg(
+            F.max_by("status", "seq").alias("status"), F.max("seq").alias("seq")
+        )
 
     def record(self, files: list[str], status: str) -> None:
         """INSERT/UPDATE equivalent: append (file, status, seq) rows.
 
-        Batched per status transition: one tiny parquet part appended
-        per CALL, not per file and not per core — pass the whole cycle's
-        file list at once. The rows are a local Arrow relation
-        (:func:`..session.local_frame`), ``coalesce(1)``-ed into one
-        slice: no Python worker serves them, which took a warm call on
-        ``local[2]`` from 0.27-0.38 s (pickled rows through a one-slice
-        ``parallelize``) to 0.13-0.17 s, 11 calls each. The call is still one Spark
-        write job. A long-lived ingest loop still accretes one small
-        file per transition; ``ops.layout.compact_parquet_dir`` on the
-        ledger path is the standing remedy, same as for any append-log
-        table."""
+        One call is one status transition and writes one parquet part,
+        ``part-<seq>-<uuid>.parquet``, however many files it marks: pass
+        the whole cycle's file list at once. The rows are encoded with
+        pyarrow on the driver against the ledger's Arrow schema and
+        published through :func:`..fsops.fs_put` (a hidden temp sibling,
+        then one rename), so the call runs no Spark job and a crash
+        mid-write leaves only a hidden file that no read lists; the
+        files it was marking stay pending. A long-lived ingest loop still
+        accretes one small file per transition;
+        ``ops.layout.compact_parquet_dir`` on the ledger path is the
+        standing remedy, same as for any append-log table."""
+        import pyarrow as pa
+        import pyarrow.parquet as pq
+        from pyspark.sql.pandas.types import to_arrow_schema
+
         self._seq += 1
-        rows = [(Path(f).name, status, self._seq) for f in files]
-        local_frame(self.spark, rows, LEDGER_SCHEMA).coalesce(1).write.mode(
-            "append"
-        ).parquet(self.path)
+        names = [Path(f).name for f in files]
+        table = pa.table(
+            [names, [status] * len(names), [self._seq] * len(names)],
+            schema=to_arrow_schema(LEDGER_SCHEMA),
+        )
+        buf = io.BytesIO()
+        pq.write_table(table, buf)
+        part = f"part-{self._seq:05d}-{uuid.uuid4().hex}.parquet"
+        fs_put(self.spark, f"{self.path.rstrip('/')}/{part}", buf.getvalue())
 
     def in_flight(self) -> DataFrame:
         return self.snapshot().filter(F.col("status") == STATUS_ACTIVE).select("file_name")
 
     def pending(self, files: list[str]) -> list[str]:
         """Files never completed (the relational form of main.py:39-49's
-        cursor check). The log is cut to these files' names before the
-        latest status is resolved, so only the done names among them
-        reach the driver."""
+        cursor check). One Spark job: the log is scanned with its schema
+        pinned and cut to these files' names, and their rows are
+        collected, which bounds the collect by the drop's own history,
+        not the ledger's. The latest status per name (highest seq) is
+        then resolved in Python, with no shuffle."""
         if not files or not self._exists():
             return list(files)
         names = sorted({Path(f).name for f in files})
-        latest = self._latest(self._log().filter(F.col("file_name").isin(names)))
-        done = {
-            r.file_name
-            for r in latest.filter(F.col("status") == STATUS_DONE).select("file_name").collect()
-        }
-        return [f for f in files if Path(f).name not in done]
+        rows = self._log().filter(F.col("file_name").isin(names)).collect()
+        latest = {r.file_name: r.status for r in sorted(rows, key=lambda r: r.seq)}
+        return [f for f in files if latest.get(Path(f).name) != STATUS_DONE]
 
 
 @dataclass

@@ -211,9 +211,13 @@ def q_layout_zorder_key(spark: SparkSession, sf_dir: str) -> DataFrame:
     "covered fraction of the global column range: well-clustered files "
     "cover small rectangles (mean fraction ~1/n_files per column vs ~1.0 "
     "for an unclustered write), which is the data-skipping claim made "
-    "measurable. Files are written to a per-run scratch dir.",
+    "measurable. Files are written to one scratch dir per (sf_dir, "
+    "process), emptied at the start of each call.",
 )
 def q_layout_zorder_write(spark: SparkSession, sf_dir: str) -> DataFrame:
+    import hashlib
+    import os
+    import shutil
     import tempfile
 
     from .ops.layout import write_zordered
@@ -222,7 +226,15 @@ def q_layout_zorder_write(spark: SparkSession, sf_dir: str) -> DataFrame:
     o = load_tables(spark, sf_dir)["orders"].select(
         "o_orderkey", "o_custkey", "o_totalprice"
     )
-    out_dir = tempfile.mkdtemp(prefix="zorder_write_")
+    # a FIXED slot per (sf_dir, process), cleaned here, as
+    # stream_upsert_sink_snapshot keeps its snapshot: the returned frame
+    # reads the dir lazily, so it must outlive the call, and a fresh
+    # mkdtemp per call would leave one data-sized copy behind each time
+    tag = hashlib.md5(
+        f"{os.path.abspath(sf_dir)}:{os.getpid()}".encode()
+    ).hexdigest()[:12]
+    out_dir = os.path.join(tempfile.gettempdir(), f"zorder_write_{tag}")
+    shutil.rmtree(out_dir, ignore_errors=True)
     write_zordered(o, out_dir, by=["o_custkey", "o_orderkey"], n_files=n_files)
 
     # explicit schema: an all-empty input writes no data files (only

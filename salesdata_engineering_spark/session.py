@@ -14,10 +14,12 @@ pin the settings that matter for correctness parity and for scale:
   makes the static number much less sensitive).
 - Arrow enabled so any Pandas-UDF extension operators move data in
   vectorized batches instead of pickled rows. Driver-side rows the
-  engine turns into a frame itself (index artifacts, probe sets, ledger
-  rows, small registry constants) go through :func:`local_frame`, which
-  builds them as an Arrow table whatever that setting says: Spark gets
-  a ``LocalRelation`` and no Python worker is ever started for it.
+  engine turns into a frame itself (index artifacts, probe sets, the
+  empty ledger snapshot, small registry constants) go through
+  :func:`local_frame`, which builds them as an Arrow table whatever
+  that setting says: Spark gets a ``LocalRelation`` and no Python
+  worker is ever started for it. Ledger marks are not frames at all:
+  ``ingest.FileLedger.record`` writes its parquet part on the driver.
 """
 
 from __future__ import annotations

@@ -24,6 +24,7 @@ from salesdata_engineering_spark.fsops import (
     fs_exists,
     fs_list,
     fs_move,
+    fs_put,
     recover_swap,
     swap_in,
 )
@@ -71,6 +72,17 @@ def _put(spark, uri: str, text: str) -> None:
     out = fs.create(path, True)
     out.write(bytearray(text, "utf-8"))
     out.close()
+
+
+def _get(spark, uri: str) -> bytes:
+    from salesdata_engineering_spark.fsops import _fs_and_path
+
+    fs, path = _fs_and_path(spark, uri)
+    stream = fs.open(path)
+    try:
+        return bytes(stream.readAllBytes())
+    finally:
+        stream.close()
 
 
 def test_fs_lifecycle_list_move_delete(spark, fs_root):
@@ -144,6 +156,27 @@ def test_swap_in_publishes_and_replaces(spark, fs_root):
     _put(spark, f"{live}.new/v2", "v2")
     swap_in(spark, f"{live}/")  # a trailing slash names the same dir
     assert _tree(spark, live) == {"": ["v2"]}
+
+
+def test_fs_put_publishes_whole_file_and_leaves_no_temp(spark, fs_root):
+    """fs_put's bytes come back byte for byte, and its hidden temp
+    sibling is gone once the file is published."""
+    data = bytes(range(256)) * 3
+    fs_put(spark, f"{fs_root}/zone/blob.bin", data)
+    fs_put(spark, f"{fs_root}/zone/empty.bin", b"")
+    listed = [(e.name, e.size) for e in fs_list(spark, f"{fs_root}/zone")]
+    assert listed == [("blob.bin", len(data)), ("empty.bin", 0)]
+    assert _get(spark, f"{fs_root}/zone/blob.bin") == data
+
+
+def test_fs_put_refused_rename_raises(spark, fs_root):
+    """Hadoop refuses to rename onto an existing file; fs_put reports
+    that as IOError, keeps the existing file and removes its temp."""
+    fs_put(spark, f"{fs_root}/zone/a.bin", b"first")
+    with pytest.raises(IOError, match="publish failed"):
+        fs_put(spark, f"{fs_root}/zone/a.bin", b"second")
+    assert [e.name for e in fs_list(spark, f"{fs_root}/zone")] == ["a.bin"]
+    assert _get(spark, f"{fs_root}/zone/a.bin") == b"first"
 
 
 def test_fs_roundtrip_is_spark_readable(spark, fs_root):

@@ -115,10 +115,11 @@ def _jobs_in(spark, group: str, fn):
 
 
 def test_ingest_job_count_pin(spark, tmp_path, landing):
-    """Header probes and the header-typed scans run no Spark job, and a
-    whole ingest stays within 5 (ledger 2, in-flight mark 1, row count
-    2) — an inferSchema read or a parquet schema-inference read of the
-    ledger would show up here."""
+    """Header probes, the header-typed scans and every ledger mark run no
+    Spark job, ``pending`` runs one, and a whole ingest stays within 3
+    (pending 1, row count 2) — an inferSchema read, a parquet
+    schema-inference read of the ledger, a latest-status shuffle or a
+    Spark write of a ledger mark would show up here."""
     paths = sorted(str(p) for p in landing.glob("*.csv"))
     res, n = _jobs_in(spark, "pin-validate", lambda: validate_files(spark, paths))
     assert n == 0 and len(res.ok) == 2
@@ -130,13 +131,16 @@ def test_ingest_job_count_pin(spark, tmp_path, landing):
     (_, report), n = _jobs_in(
         spark, "pin-ingest-new", lambda: ingest_batch(spark, str(landing), err, ledger)
     )
-    assert len(report.accepted) == 2 and n <= 5, n
-    ledger.record(report.accepted, STATUS_DONE)
+    assert len(report.accepted) == 2 and n <= 3, n
+    _, n = _jobs_in(spark, "pin-record", lambda: ledger.record(report.accepted, STATUS_DONE))
+    assert n == 0, n
+    pending, n = _jobs_in(spark, "pin-pending", lambda: ledger.pending(paths))
+    assert pending == [p for p in paths if p not in report.accepted] and n <= 1, n
     (landing / "sales_data_2024-01-03.csv").write_text(VALID_CSV)
     (_, report), n = _jobs_in(
         spark, "pin-ingest-rerun", lambda: ingest_batch(spark, str(landing), err, ledger)
     )
-    assert len(report.accepted) == 1 and n <= 5, n
+    assert len(report.accepted) == 1 and n <= 3, n
 
 
 def test_ingest_probes_each_file_once(spark, tmp_path, landing, monkeypatch):
@@ -273,6 +277,33 @@ def test_ledger_seq_survives_restart(spark, tmp_path):
     snap = {r.file_name: (r.status, r.seq) for r in second.snapshot().collect()}
     assert snap["b.csv"] == ("I", 3), snap
     assert snap["a.csv"] == ("I", 2), snap
+
+
+def test_ledger_ignores_a_mark_cut_before_its_rename(spark, tmp_path):
+    """A record killed between its write and its rename leaves a whole
+    parquet file under a hidden ``_tmp-*`` name. No read lists it — not
+    pending, not snapshot, not a ``*.parquet`` glob — so the file it was
+    marking stays pending."""
+    import duckdb
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    from salesdata_engineering_spark.schemas import LEDGER_SCHEMA
+
+    path = tmp_path / "ledger_killed"
+    ledger = FileLedger(spark, str(path))
+    ledger.record(["a.csv"], STATUS_DONE)
+    cut = pa.table(
+        [["b.csv"], [STATUS_DONE], [2]], schema=to_arrow_schema(LEDGER_SCHEMA)
+    )
+    pq.write_table(cut, path / "_tmp-0123456789abcdef0123456789abcdef")
+
+    assert ledger.pending(["a.csv", "b.csv"]) == ["b.csv"]
+    assert [r.file_name for r in ledger.snapshot().collect()] == ["a.csv"]
+    got = duckdb.sql(f"SELECT file_name FROM read_parquet('{path}/*.parquet')").fetchall()
+    assert got == [("a.csv",)]
+    assert FileLedger(spark, str(path))._seq == 1  # the restart ignores it too
 
 
 def test_read_jdbc_wiring_reaches_jdbc_layer(spark):

@@ -215,3 +215,22 @@ def test_compact_self_heals_interrupted_swap(spark, tmp_path):
     assert n == 1
     assert spark.read.parquet(path).count() == 5_000
     shutil.rmtree(path)
+
+
+def test_zorder_write_query_reuses_one_scratch_dir(spark, sf_dir):
+    """layout_zorder_write keeps one scratch slot per (sf_dir, process):
+    two calls leave one zorder_write_* dir, not two."""
+    import tempfile
+
+    from salesdata_engineering_spark.registry import QUERIES
+
+    def slots() -> set[str]:
+        return set(glob.glob(f"{tempfile.gettempdir()}/zorder_write_*"))
+
+    before = slots()
+    QUERIES["layout_zorder_write"].fn(spark, sf_dir)
+    after_one = slots()
+    out = QUERIES["layout_zorder_write"].fn(spark, sf_dir)
+    assert len(after_one - before) <= 1
+    assert slots() == after_one
+    assert out.count() == 8  # the second call's files, read back

@@ -17,9 +17,17 @@ fresh sessions diff clean and a refactor can be checked plan-identical
 with a plain ``diff``. So is the persisted index's cache key, which
 hashes the build code's source and so differs between any two
 versions of it, the per-process temp-dir tag of the upsert-sink
-snapshot (``upsert_sink_<tag>.snap``), which hashes the pid, and the
-random ``mkdtemp`` suffix of the Z-order write target
-(``zorder_write_<tag>``).
+snapshot (``upsert_sink_<tag>.snap``) and of the Z-order write target
+(``zorder_write_<tag>``), which hash the pid.
+
+A query with two or more ``count_distinct`` groups plans an ``Expand``
+whose groups (and the columns they fill) come in an order that follows
+the expression ids the session has already used, and the group ids
+(``gid``) its aggregates filter on follow that order. ``normalise``
+puts each such ``Expand`` in one canonical order — distinct columns
+sorted by name, groups sorted by the column they fill — and renumbers
+the gid filters and reorders the gid-carrying attribute lists below it
+to match.
 """
 
 from __future__ import annotations
@@ -44,14 +52,77 @@ _NORMALISE = [
     (re.compile(r"at \w+ at [\w.]+:\d+"), ""),
     (re.compile(r"(ivf_pq_(?:app_)?)[0-9a-f]{8}_[0-9a-f]{16}"), r"\1<key>"),
     (re.compile(r"(upsert_sink_)[0-9a-f]{12}"), r"\1<tag>"),
-    (re.compile(r"(zorder_write_)[a-z0-9_]{8}"), r"\1<tag>"),
+    (re.compile(r"(zorder_write_)[0-9a-f]{12}"), r"\1<tag>"),
 ]
+
+
+_GID_FILTER = re.compile(r"\(gid# = (\d+)\)")
+
+
+def _split(text: str) -> list[str]:
+    """``text`` split at its top-level ``", "`` (not inside brackets)."""
+    parts, depth, start = [], 0, 0
+    for i, ch in enumerate(text):
+        if ch in "([":
+            depth += 1
+        elif ch in ")]":
+            depth -= 1
+        elif depth == 0 and text.startswith(", ", i):
+            parts.append(text[start:i])
+            start = i + 2
+    return parts + [text[start:]]
+
+
+def _canonical_args(line: str):
+    """An ``Expand``'s ``Arguments: [[group], ...], [outputs]`` line in
+    canonical order, the old-to-new gid map and the (old, new) text of
+    its distinct-column list; None unless it is a projection list and an
+    output list, and the output column ``gid#`` holds integer literals."""
+    parts = _split(line[len("Arguments: ") :])
+    cols = _split(parts[-1][1:-1])
+    if len(parts) != 2 or "gid#" not in cols:
+        return None
+    g = cols.index("gid#")  # the distinct columns come before it
+    rows = [_split(r[1:-1]) for r in _split(parts[0][1:-1])]
+    if not all(len(r) == len(cols) and r[g].isdigit() for r in rows):
+        return None
+    perm = sorted(range(g), key=cols.__getitem__)
+    rows = [[r[i] for i in perm] + r[g:] for r in rows]
+    rows.sort(key=lambda r: (r[g] != "0", [x == "null" for x in r[:g]], r))
+    new = sorted((r[g] for r in rows), key=int)
+    gids = {r[g]: n for r, n in zip(rows, new)}
+    for r, n in zip(rows, new):
+        r[g] = n
+    canon = [cols[i] for i in perm] + cols[g:]
+    body = ", ".join(f"[{', '.join(r)}]" for r in rows)
+    swap = (", ".join(cols[:g]), ", ".join(canon[:g]))
+    return f"Arguments: [{body}], [{', '.join(canon)}]", gids, swap
+
+
+def _canonical_expand(plan: str) -> str:
+    """Put every distinct-aggregate ``Expand`` (one whose output carries
+    ``gid#``) in canonical order: distinct columns sorted by name,
+    groups sorted by the columns they fill (the gid-0 group first), gids
+    renumbered in that order. Below it, until the next such ``Expand``,
+    the ``gid# = N`` filters take the new numbers and the lines that
+    carry ``gid#`` list the distinct columns in the new order."""
+    out, gids, swap = [], {}, ("", "")
+    for line in plan.split("\n"):
+        canon = line.startswith("Arguments: [[") and _canonical_args(line)
+        if canon:
+            line, gids, swap = canon
+        elif gids:
+            line = _GID_FILTER.sub(lambda m: f"(gid# = {gids.get(m[1], m[1])})", line)
+            if swap[0] != swap[1] and "gid#" in line:
+                line = line.replace(*swap)
+        out.append(line)
+    return "\n".join(out)
 
 
 def normalise(plan: str) -> str:
     for pat, rep in _NORMALISE:
         plan = pat.sub(rep, plan)
-    return plan
+    return _canonical_expand(plan)
 
 
 def main() -> None:
